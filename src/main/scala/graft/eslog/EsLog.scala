@@ -17,8 +17,11 @@ import graft.model.RecordBatchRow
   *
   *  - `append`  = client append path (replication_stream.rs:326-363): offsets
   *    are assigned contiguously at commit time by the single epoch-fenced
-  *    writer; executor tasks write Parquet, the driver's manifest commit is
-  *    the ack (quorum replaced by object-store durability).
+  *    writer; executor tasks write Parquet files under their final names and
+  *    audit their own footers, and the driver's manifest commit is the ack
+  *    (quorum replaced by object-store durability). A file is invisible
+  *    until the commit names it, so no output committer runs: the log is the
+  *    commit, as in the reference's range offload (range_offload.rs).
   *  - `fetch`   = client fetch path (replication_stream.rs:365-422): manifest
   *    range routing (the BTreeMap upper_bound) becomes file pruning; the
   *    sparse-index byte-range reads (object_reader.rs:34-80) become Parquet
@@ -31,7 +34,7 @@ import graft.model.RecordBatchRow
   * a plain vectorized Parquet scan, so predicate pushdown, column pruning and
   * whole-stage codegen all apply untouched. Offset assignment is two passes
   * over the input (per-partition delta sums, then the write) — no driver-side
-  * data movement, no collect of rows.
+  * data movement, no collect of rows, no re-read of written files.
   */
 object EsLog {
   val DefaultStreamId = 0L
@@ -136,158 +139,6 @@ object EsLog {
 
   // ---- write path ----
 
-  /** Per-file audit record read from a parquet footer: row count, file
-    * length, and — when column statistics are present — min/max of the
-    * physical `base_offset` column across all row groups. */
-  private final case class FooterInfo(rows: Long, bytes: Long,
-                                      minOff: Option[Long], maxOff: Option[Long])
-
-  /** Read every committed file's parquet footer EXECUTOR-SIDE (one tiny Spark
-    * job over the file list — metadata-only opens, no data pages) and return
-    * the audit records. Keeps the commit critical section free of driver-side
-    * GETs: at an object store a thousands-file commit would otherwise issue a
-    * thousand driver HTTP reads inside the commit path, and a wedged read
-    * would hang it. As a Spark job the reads are spread across the cluster,
-    * bounded by its parallelism, and covered by task retries/timeouts. The
-    * footer open also yields the file length, so the commit needs no separate
-    * per-file stat/HEAD round trips. */
-  private def readFooter(base: String, rel: String,
-                         conf: org.apache.hadoop.conf.Configuration): (String, FooterInfo) = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(base), rel), conf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      var rows = 0L
-      var minOff = Long.MaxValue; var maxOff = Long.MinValue; var statsOk = true
-      reader.getFooter.getBlocks.asScala.foreach { block =>
-        rows += block.getRowCount
-        block.getColumns.asScala.find(_.getPath.toDotString == "base_offset") match {
-          case Some(c) =>
-            val st: org.apache.parquet.column.statistics.Statistics[_] =
-              c.getStatistics
-            if (st == null || !st.hasNonNullValue) statsOk = false
-            else {
-              minOff = math.min(minOff, st.genericGetMin.asInstanceOf[java.lang.Long].longValue())
-              maxOff = math.max(maxOff, st.genericGetMax.asInstanceOf[java.lang.Long].longValue())
-            }
-          case None => statsOk = false
-        }
-      }
-      val haveStats = statsOk && rows > 0
-      rel -> FooterInfo(rows, in.getLength,
-        if (haveStats) Some(minOff) else None, if (haveStats) Some(maxOff) else None)
-    } finally reader.close()
-  }
-
-  /** Commits at or below this many files read footers on the DRIVER (a small
-    * thread pool): a routine commit then skips a whole Spark job's schedule/
-    * collect round-trip (~25-50 ms of the append critical path). Above it,
-    * the executor-side job takes over — see [[footerAudit]]'s rationale. */
-  private val DriverFooterAuditMax = 32
-
-  private def footerAudit(spark: SparkSession, streamDir: String,
-                          relPaths: Seq[String]): Map[String, FooterInfo] = {
-    val conf = org.apache.spark.sql.graftshim.GraftShims.shippableHadoopConf(spark)
-    // fully-qualified so the executor-side FS resolution matches the driver's
-    val base = dataFs(streamDir).makeQualified(hpath(streamDir)).toString
-    if (relPaths.size <= DriverFooterAuditMax) {
-      // small commit: bounded driver pool, same reads, no job overhead.
-      // The executor-side path below inherits Spark's task retries; this
-      // path must provide its own, or one transient storage hiccup on one
-      // footer GET would abort the whole commit.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(1, math.min(8, relPaths.size)))
-      try {
-        import scala.jdk.CollectionConverters._
-        val c = conf()
-        def withRetry(rel: String): (String, FooterInfo) = {
-          var attempt = 0
-          while (true) {
-            try return readFooter(base, rel, c)
-            catch {
-              case e: java.io.IOException if attempt < 2 =>
-                attempt += 1
-                Thread.sleep(50L << attempt)
-            }
-          }
-          throw new IllegalStateException("unreachable")
-        }
-        pool.invokeAll(relPaths.map { rel =>
-          (() => withRetry(rel)): java.util.concurrent.Callable[(String, FooterInfo)]
-        }.asJava).asScala.map(_.get()).toMap
-      } finally pool.shutdown()
-    } else {
-      // Footer opens are ~1 ms each: pack several per task so a mid-size
-      // commit pays one small job; a thousands-file commit spreads across
-      // the cluster, bounded by its parallelism, covered by task retries —
-      // and keeps the commit critical section free of unbounded driver-side
-      // GETs at an object store.
-      val perTask = 8
-      val slices = math.max(1, math.min(
-        (relPaths.size + perTask - 1) / perTask, spark.sparkContext.defaultParallelism * 4))
-      spark.sparkContext.parallelize(relPaths, slices)
-        .map(rel => readFooter(base, rel, conf()))
-        .collect().toMap
-    }
-  }
-
-  /** Map written `part-<pid>-*` files to per-partition stats and build their
-    * FileMetas, cross-checked against what the writer actually wrote. Fails
-    * loudly if the writer produced anything other than one file per non-empty
-    * partition (the commit math depends on it; the write pins
-    * maxRecordsPerFile=0 to guarantee it). Part numbers are parsed up to the
-    * first '-', so >=100k-partition jobs parse correctly.
-    *
-    * The footer audit ([[footerAudit]]) supplies file sizes AND validates the
-    * manifest against file contents before commit: row counts must match the
-    * stats pass exactly, and the parquet column statistics for `base_offset`
-    * must agree with the FileMeta span (min == startOffset; max inside
-    * [endOffset - maxDelta, endOffset)). This catches a nondeterministic
-    * upstream re-evaluating differently between the stats pass and the write
-    * pass — including the stable-count case where only offsets/deltas drift —
-    * so a mismatching commit aborts instead of landing a manifest that
-    * disagrees with file contents. A part file with no matching stats row
-    * (FileFormatWriter emits an empty file for a 0-row task 0) is deleted,
-    * not leaked. */
-  private[graft] def commitFileMetas(spark: SparkSession, streamDir: String, outRel: String,
-      outAbs: String, stats: Seq[(Int, Long, Long, Long, Long, Long, Int)]): Seq[FileMeta] = {
-    val outFs = dataFs(outAbs)
-    val written: Seq[String] =
-      outFs.listStatus(hpath(outAbs)).toSeq
-        .map(_.getPath.getName)
-        .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-    val byPid = written.groupBy(_.stripPrefix("part-").takeWhile(_ != '-').toInt)
-    byPid.find(_._2.size > 1).foreach { case (pid, names) =>
-      throw new IllegalStateException(
-        s"partition $pid wrote ${names.size} files (${names.mkString(", ")}) in $outAbs — " +
-          "one file per task is required for manifest commit")
-    }
-    val statPids = stats.map(_._1).toSet
-    byPid.filterNot(kv => statPids(kv._1)).values.flatten
-      .foreach(name => outFs.delete(hpath(join(outAbs, name)), false))
-
-    val names = stats.map { case (pid, _, _, _, _, _, _) =>
-      pid -> byPid.getOrElse(pid,
-        throw new IllegalStateException(s"no written file for partition $pid in $outAbs")).head
-    }.toMap
-    val audit = footerAudit(spark, streamDir, names.values.map(n => s"$outRel/$n").toSeq)
-
-    stats.map { case (pid, nrows, startOff, endOff, minTs, maxTs, maxD) =>
-      val rel = s"$outRel/${names(pid)}"
-      val info = audit(rel)
-      if (info.rows != nrows) throw new IllegalStateException(
-        s"footer row count ${info.rows} != stats rows $nrows for $rel — " +
-          "input evaluated differently between stats and write passes; commit aborted")
-      for (mo <- info.minOff) if (mo != startOff) throw new IllegalStateException(
-        s"footer min base_offset $mo != stats startOffset $startOff for $rel — " +
-          "offsets drifted between stats and write passes; commit aborted")
-      for (mo <- info.maxOff) if (mo < endOff - maxD || mo >= endOff) throw new IllegalStateException(
-        s"footer max base_offset $mo outside [${endOff - maxD}, $endOff) for $rel — " +
-          "offsets drifted between stats and write passes; commit aborted")
-      FileMeta(rel, nrows, info.bytes, startOff, endOff, minTs, maxTs, maxD)
-    }.sortBy(_.startOffset)
-  }
-
   private def deleteRecursively(abs: String): Unit = {
     val fs = dataFs(abs)
     val p = hpath(abs)
@@ -326,15 +177,7 @@ object EsLog {
              extraActions: Seq[Action] = Seq.empty,
              targetFileBytes: Long = DefaultTargetFileBytes,
              extraGuards: Seq[KvGuard] = Seq.empty): (Long, Long) = {
-    val dbgT = sys.env.contains("GRAFT_APPEND_TIMING")
-    var dbgT0 = System.nanoTime()
-    def dbgMark(name: String): Unit = if (dbgT) {
-      val now = System.nanoTime()
-      System.err.println(f"[append-timing] $name: ${(now - dbgT0) / 1e9}%.3f s")
-      dbgT0 = now
-    }
     val st0 = MetaLog.load(streamDir)
-    dbgMark("load")
     if (st0.deleted) throw new IllegalStateException(s"stream $streamDir deleted")
     if (epoch < st0.epoch) throw new FencedException(s"append epoch $epoch < ${st0.epoch}")
 
@@ -393,12 +236,9 @@ object EsLog {
     // every shuffle stage inside the plan executes once and is reused — both
     // passes are guaranteed identical partition membership. Per-partition
     // aggregates are order-insensitive, so reduce-side fetch-order jitter
-    // between the jobs is harmless; `validateFooters` backstops the one
-    // remaining hazard (shuffle-output loss + nondeterministic recompute).
-    // env-gated stage timing for perf work: GRAFT_APPEND_TIMING=1 prints
-    // per-stage seconds (load/normalize/plan/pass1/write/metas+footers/
-    // commit) to stderr
-    dbgMark("normalize")
+    // between the jobs is harmless; the write tasks' footer audit backstops
+    // the one remaining hazard (shuffle-output loss + nondeterministic
+    // recompute).
     val internal0 = org.apache.spark.sql.graftshim.GraftShims.internalRdd(batches)
     // Write-time file rolling (the reference's RangeAccumulator sizes
     // offload objects to 128 MiB as it accumulates,
@@ -426,112 +266,56 @@ object EsLog {
     // wrapped plan, a measurable per-commit driver tax at ingest rates
     // (~15-25 ms of a ~250 ms commit). The rare split-up path still pays
     // the second pass: it shuffles anyway.
-    val internal =
+    val (planned, internal) =
       if (sortKey.isEmpty && numPartitions <= 0) // any non-positive count = auto-roll
         sizeTargetedCount(batches, targetFileBytes) match {
           case Some(n) =>
             val cur = internal0.getNumPartitions
             val floor = math.min(cur, math.max(2, spark.sparkContext.defaultParallelism / 4))
             val floored = math.max(n, floor)
-            if (floored * 2 <= cur) internal0.coalesce(floored)
-            else if (floored >= cur * 2)
-              org.apache.spark.sql.graftshim.GraftShims.internalRdd(batches.repartition(floored))
-            else internal0
-          case None => internal0
+            if (floored * 2 <= cur) (batches, internal0.coalesce(floored))
+            else if (floored >= cur * 2) {
+              val split = batches.repartition(floored)
+              (split, org.apache.spark.sql.graftshim.GraftShims.internalRdd(split))
+            } else (batches, internal0)
+          case None => (batches, internal0)
         }
-      else internal0
-    dbgMark("plan")
-    // Pass 1: per-partition delta sums -> contiguous per-partition base
-    // offsets. The distributed analogue of the write window: gap-free by
-    // construction (window.rs:79-204), plus per-partition stats so commit
-    // needs no re-read of the written files.
-    val deltaIdx = 2 // last_offset_delta position in `normalize` output
-    val tsIdx = 3
-    val partSums = internal.mapPartitionsWithIndex { (pid, it) =>
-      var s = 0L; var n = 0L; var maxD = 0
-      var minTs = Long.MaxValue; var maxTs = Long.MinValue
-      it.foreach { r =>
-        val d = r.getInt(deltaIdx); s += d; n += 1
-        if (d > maxD) maxD = d
-        val ts = r.getLong(tsIdx)
-        if (ts < minTs) minTs = ts
-        if (ts > maxTs) maxTs = ts
-      }
-      Iterator((pid, s, n, maxD, minTs, maxTs))
-    }.collect().sortBy(_._1)
-    dbgMark("pass1")
-    val partStarts = partSums.scanLeft(next) { case (acc, p) => acc + p._2 }
-    val total = partSums.map(_._2).sum
-    if (total == 0) return (next, next)
-    val startByPid = partSums.map(_._1).zip(partStarts).toMap
-
-    // Pass 2: assign offsets, write Parquet sorted by base_offset so
-    // row-group min/max stats give tight offset pruning (= the reference's
-    // sparse index, range_offload.rs:361-451). Output rows reference the
-    // source row's map/binary buffers — safe because FileFormatWriter
-    // serializes each row into parquet column buffers before pulling next().
-    val segRel = f"seg-${seg.index}%05d"
-    val commitId = UUID.randomUUID().toString.take(8)
-    val outRel = s"$segRel/$commitId"
-    val outAbs = join(streamDir, outRel)
+      else (batches, internal0)
     val segIndex = seg.index
-    val assigned = internal.mapPartitionsWithIndex { (pid, it) =>
-      var off = startByPid(pid)
-      it.map { r =>
-        val delta = r.getInt(deltaIdx)
-        val values = new Array[Any](8)
-        values(0) = if (r.isNullAt(0)) null else r.getLong(0)
-        values(1) = segIndex
-        values(2) = if (r.isNullAt(1)) null else r.getShort(1)
-        values(3) = off
-        values(4) = delta
-        values(5) = if (r.isNullAt(tsIdx)) null else r.getLong(tsIdx)
-        values(6) = if (r.isNullAt(4)) null else r.getMap(4)
-        values(7) = if (r.isNullAt(5)) null else r.getBinary(5)
-        off += delta
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(values)
-          : org.apache.spark.sql.catalyst.InternalRow
+    val outRel = f"seg-$segIndex%05d/${UUID.randomUUID().toString.take(8)}"
+
+    // Both passes run as one SQL execution of the planned input, so
+    // listeners see the append's planning and written bytes as they would a
+    // DataFrameWriter's.
+    val (files, end) = org.apache.spark.sql.graftshim.GraftShims.withExecution(planned, "eslog append") {
+      // Pass 1: per-partition delta sums -> contiguous per-partition base
+      // offsets. The distributed analogue of the write window: gap-free by
+      // construction (window.rs:79-204), plus per-partition stats so commit
+      // needs no re-read of the written files.
+      val partSums = spark.sparkContext.runJob(internal, CommitTasks.appendStats)
+      val partStarts = partSums.scanLeft(next)(_ + _._1)
+      if (partStarts.last == next) (Seq.empty, next)
+      else {
+        // Pass 2: assign offsets and write Parquet sorted by base_offset, so
+        // row-group min/max stats give tight offset pruning (= the
+        // reference's sparse index, range_offload.rs:361-451). The files go
+        // straight to their final names; the manifest commit below is what
+        // publishes them.
+        val stats = partSums.indices.filter(partSums(_)._2 > 0).map { pid =>
+          val (sum, nrows, maxD, minTs, maxTs) = partSums(pid)
+          (pid, nrows, partStarts(pid), partStarts(pid) + sum, minTs, maxTs, maxD)
+        }
+        (CommitTasks.writeAudited(spark,
+          internal.mapPartitionsWithIndex(CommitTasks.assignOffsets(partStarts, segIndex)),
+          streamDir, outRel, CommitTasks.BlockBytes, stats), partStarts.last)
       }
     }
-    org.apache.spark.sql.graftshim.GraftShims
-      .dfFromInternalRdd(spark, assigned, RecordBatchRow.schema)
-      .write.mode("errorifexists")
-      // Row-group size = the reference's sparse-index granularity
-      // (range_offload.rs:26, one index entry ≈ every 16 MiB): offset
-      // pruning then skips at the same resolution the reference seeks at.
-      .option("parquet.block.size", (16L * 1024 * 1024).toString)
-      // The commit derives file boundaries from pass-1 per-partition stats,
-      // which requires exactly one file per task — override any session-level
-      // maxRecordsPerFile so the writer can never split a partition.
-      .option("maxRecordsPerFile", "0")
-      .parquet(outAbs)
-    dbgMark("write")
-
-    // Commit from the pass-1 stats: one task partition = one written file
-    // (`part-<pid>-*`), so file boundaries are known without re-reading data
-    // (the reference gets this from the write window; DSv2 would get it from
-    // WriterCommitMessages). One directory listing + one executor-side footer
-    // audit job, no per-row jobs, no driver FS reads.
-    val files = try {
-      val fs = commitFileMetas(spark, streamDir, outRel, outAbs,
-        partSums.toSeq.filter(_._3 > 0).map { case (pid, sum, nrows, maxD, minTs, maxTs) =>
-          (pid, nrows, startByPid(pid), startByPid(pid) + sum, minTs, maxTs, maxD)
-        })
-      require(fs.head.startOffset == next && fs.last.endOffset == next + total,
-        s"offset assignment not contiguous: ${fs.map(f => (f.startOffset, f.endOffset))}")
-      fs
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        // Nothing committed yet — the written files are unreachable; delete
-        // before rethrow so a failed append can't leak storage.
-        deleteRecursively(outAbs)
-        throw e
-    }
-    dbgMark("metas+footers")
+    if (end == next) return (next, next)
 
     try {
-      MetaLog.commit(streamDir, st, Seq(CommitFiles(seg.index, epoch, files)) ++ extraActions)
-      dbgMark("commit")
+      require(files.head.startOffset == next && files.last.endOffset == end,
+        s"offset assignment not contiguous: ${files.map(f => (f.startOffset, f.endOffset))}")
+      MetaLog.commit(streamDir, st, Seq(CommitFiles(segIndex, epoch, files)) ++ extraActions)
     } catch {
       case scala.util.control.NonFatal(e) =>
         // The written files are unreachable on any pre-commit failure
@@ -539,10 +323,10 @@ object EsLog {
         // can't leak storage. Only skip cleanup if the commit in fact landed
         // (an exception from post-commit bookkeeping).
         val landed = MetaLog.load(streamDir).allFiles.map(_.path).toSet
-        if (!files.exists(f => landed(f.path))) deleteRecursively(outAbs)
+        if (!files.exists(f => landed(f.path))) deleteRecursively(join(streamDir, outRel))
         throw e
     }
-    (next, next + total)
+    (next, end)
   }
 
   /** Ingest raw append-frame payloads: each row of `frames` carries a binary
@@ -1028,7 +812,7 @@ object EsLog {
     * pass and ALL contiguity validation run over those metadata-sized rows
     * — the heavy input is then decoded exactly once (the shuffle map) and
     * its shuffle output read exactly once (the write). Safety is unchanged:
-    * [[commitFileMetas]]' footer audit compares every written file's row
+    * [[CommitTasks.auditedMetas]] compares every written file's row
     * count and offset span against the light-derived stats, so a light/heavy
     * divergence aborts the commit before the CAS. Without `statsInput` the
     * original two-pass-over-one-shuffle flow runs unchanged.
@@ -1262,7 +1046,6 @@ object EsLog {
 
     // pass 2 (write): same shuffle output, one parquet file per partition
     val outRel = s"backfill/${UUID.randomUUID().toString.take(8)}"
-    val outAbs = join(streamDir, outRel)
     val assigned = shuffled.mapPartitions { it =>
       val sp = spansB.value
       val startsL = sp.map(_._2)
@@ -1285,18 +1068,11 @@ object EsLog {
           : org.apache.spark.sql.catalyst.InternalRow
       }
     }
-    org.apache.spark.sql.graftshim.GraftShims
-      .dfFromInternalRdd(spark, assigned, RecordBatchRow.schema)
-      .write.mode("errorifexists")
-      .option("parquet.block.size", (16L * 1024 * 1024).toString)
-      .option("maxRecordsPerFile", "0")
-      .parquet(outAbs)
-
+    val files = CommitTasks.writeAudited(spark, assigned, streamDir, outRel, CommitTasks.BlockBytes,
+      partStats.toSeq.map { case (pid, _, n, mn, end, minTs, maxTs, maxD) =>
+        (pid, n, mn, end, minTs, maxTs, maxD)
+      })
     try {
-      val files = commitFileMetas(spark, streamDir, outRel, outAbs,
-        partStats.toSeq.map { case (pid, _, n, mn, end, minTs, maxTs, maxD) =>
-          (pid, n, mn, end, minTs, maxTs, maxD)
-        })
       // one BackfillFiles per touched segment, all in ONE CAS commit
       val bySeg = partStats.map(p => p._4 -> p._2).toMap // minOff -> segIdx
       val actions = files.groupBy(f => spans(bySeg(f.startOffset))._1)
@@ -1307,7 +1083,7 @@ object EsLog {
     } catch {
       case scala.util.control.NonFatal(e) =>
         val landed = MetaLog.load(streamDir).allFiles.map(_.path).toSet
-        if (!landed.exists(_.startsWith(outRel))) deleteRecursively(outAbs)
+        if (!landed.exists(_.startsWith(outRel))) deleteRecursively(join(streamDir, outRel))
         throw e
     }
   }
@@ -1805,28 +1581,10 @@ object EsLog {
           Iterator((pid, n, minOff, maxEnd, minTs, maxTs, maxD))
         }.collect().filter(_._2 > 0).sortBy(_._1)
 
-        val commitId = UUID.randomUUID().toString.take(8)
-        val outRel = f"seg-${seg.index}%05d/compact-$commitId"
+        val outRel = f"seg-${seg.index}%05d/compact-${UUID.randomUUID().toString.take(8)}"
         val outAbs = join(streamDir, outRel)
-        org.apache.spark.sql.graftshim.GraftShims
-          .dfFromInternalRdd(spark, internal, RecordBatchRow.schema)
-          .write.mode("errorifexists")
-          .option("parquet.block.size", blockBytes.toString)
-          .option("maxRecordsPerFile", "0")
-          .parquet(outAbs)
-
-        val added = try {
-          commitFileMetas(spark, streamDir, outRel, outAbs,
-            stats.toSeq.map { case (pid, n, minOff, maxEnd, minTs, maxTs, maxD) =>
-              (pid, n, minOff, maxEnd, minTs, maxTs, maxD)
-            })
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            // audit failed before the swap — the rewrite is unreachable;
-            // delete it so a failed compaction can't leak storage
-            deleteRecursively(outAbs)
-            throw e
-        }
+        // an audit failure deletes the rewrite before the swap
+        val added = CommitTasks.writeAudited(spark, internal, streamDir, outRel, blockBytes, stats.toSeq)
         val removed = seg.files.map(_.path)
         st = MetaLog.commitWithRetry(streamDir) { cur =>
           // revalidate against the current state: segment must still hold

@@ -62,6 +62,14 @@ object GraftShims {
   def internalRdd(df: DataFrame): org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.toRdd
 
+  /** Runs `body` — jobs over [[internalRdd]] of `df` — as one SQL execution
+    * of `df`'s plan: its jobs carry the execution id and listeners get the
+    * execution's start and end events, plan and planning phases included,
+    * as for any DataFrame action. */
+  def withExecution[T](df: DataFrame, name: String)(body: => T): T =
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
+      df.asInstanceOf[classic.Dataset[Row]].queryExecution, Some(name))(body)
+
   /** Wrap an InternalRow RDD as a batch DataFrame without a Row round trip
     * (the inverse of [[internalRdd]]; rows must already match `schema`). */
   def dfFromInternalRdd(spark: SparkSession,

@@ -730,37 +730,100 @@ class EsLogSpec extends SparkTestBase {
 
   test("commit audit: footer stats disagreeing with the manifest abort the commit") {
     import org.apache.spark.sql.types.{IntegerType, ShortType}
+    import org.apache.spark.sql.graftshim.{GraftShims, PartFileWriter}
+    import graft.eslog.CommitTasks
     val dir = tmpDir("eslog-audit-")
-    // one parquet part file with base_offset 0..99, deltas of 1
+    // one part file written by the commit writer, base_offset 0..99, deltas of 1
     val outRel = "seg-00000/audit"
     val outAbs = java.nio.file.Paths.get(dir, outRel).toString
-    spark.range(100).select(
+    val rows = GraftShims.internalRdd(spark.range(100).select(
       lit(7L).as("stream_id"), lit(0).cast(IntegerType).as("range_index"),
       lit(0).cast(ShortType).as("flags"), col("id").as("base_offset"),
       lit(1).cast(IntegerType).as("last_offset_delta"), lit(5L).as("base_timestamp"),
       map().cast("map<string,string>").as("properties"),
       col("id").cast("string").cast("binary").as("payload"))
-      .coalesce(1).sortWithinPartitions("base_offset")
-      .write.parquet(outAbs)
+      .coalesce(1).sortWithinPartitions("base_offset"))
+    val parts = PartFileWriter.write(spark, rows, graft.model.RecordBatchRow.schema, outAbs,
+      CommitTasks.BlockBytes, "base_offset")
+    assert(parts.map(p => (p.pid, p.rows, p.minKey, p.maxKey)) == Seq((0, 100L, Some(0L), Some(99L))))
 
-    // agreeing stats: metas built, sizes from the footer audit
-    val ok = EsLog.commitFileMetas(spark, dir, outRel, outAbs,
-      Seq((0, 100L, 0L, 100L, 5L, 5L, 1)))
+    // agreeing stats: metas built, sizes from the task's footer read
+    val ok = CommitTasks.auditedMetas(outRel, Seq((0, 100L, 0L, 100L, 5L, 5L, 1)), parts)
     assert(ok.size == 1 && ok.head.rows == 100 && ok.head.bytes > 0)
+    assert(ok.head.bytes == java.nio.file.Files.size(java.nio.file.Paths.get(dir, ok.head.path)))
     assert(ok.head.startOffset == 0L && ok.head.endOffset == 100L)
 
     // row-count drift: stats say 99 rows, file holds 100
     val e1 = intercept[IllegalStateException](
-      EsLog.commitFileMetas(spark, dir, outRel, outAbs,
-        Seq((0, 99L, 0L, 99L, 5L, 5L, 1))))
+      CommitTasks.auditedMetas(outRel, Seq((0, 99L, 0L, 99L, 5L, 5L, 1)), parts))
     assert(e1.getMessage.contains("row count"), e1.getMessage)
 
     // offset drift with a STABLE row count (the silent-corruption case the
     // column-statistics cross-check exists for): stats claim [1, 101)
     val e2 = intercept[IllegalStateException](
-      EsLog.commitFileMetas(spark, dir, outRel, outAbs,
-        Seq((0, 100L, 1L, 101L, 5L, 5L, 1))))
+      CommitTasks.auditedMetas(outRel, Seq((0, 100L, 1L, 101L, 5L, 5L, 1)), parts))
     assert(e2.getMessage.contains("base_offset"), e2.getMessage)
+
+    // the writer refuses an existing output directory and leaves it as it was
+    val before = new java.io.File(outAbs).list().toSet
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException](
+      PartFileWriter.write(spark, rows, graft.model.RecordBatchRow.schema, outAbs,
+        CommitTasks.BlockBytes, "base_offset"))
+    assert(new java.io.File(outAbs).list().toSet == before)
+  }
+
+  test("append writes one part file per non-empty partition, no committer debris") {
+    val dir = tmpDir("eslog-parts-")
+    EsLog.create(dir)
+    EsLog.open(dir, 1L)
+    // 4 input partitions, the last two empty; targetFileBytes = 0 keeps the
+    // input's partitioning
+    val in = spark.range(0, 20, 1, 4).where(col("id") < 10)
+      .select(col("id").cast("string").cast("binary").as("payload"))
+    assert(EsLog.append(spark, dir, in, 1L, targetFileBytes = 0L) == ((0L, 10L)))
+    val files = {
+      import scala.jdk.CollectionConverters._
+      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try w.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => java.nio.file.Paths.get(dir).relativize(p).toString)
+        .filterNot(_.startsWith(graft.meta.MetaLog.LogDirName)).toSeq.sorted
+      finally w.close()
+    }
+    val data = files.filterNot(_.split('/').last.startsWith("."))
+    assert(data.map(_.split('/').last.take(10)) == Seq("part-00000", "part-00001"), files)
+    assert(!files.exists(f => f.contains("_temporary") || f.endsWith("_SUCCESS")), files)
+    val manifest = graft.meta.MetaLog.load(dir).allFiles
+    assert(manifest.map(_.path).sorted == data)
+    assert(manifest.map(f => (f.rows, f.startOffset, f.endOffset)).sortBy(_._2) ==
+      Seq((5L, 0L, 5L), (5L, 5L, 10L)))
+  }
+
+  test("a write task failing mid-partition aborts the append and leaves no files") {
+    val dir = tmpDir("eslog-taskfail-")
+    EsLog.create(dir)
+    EsLog.open(dir, 1L)
+    val payload = col("id").cast("string").cast("binary").as("payload")
+    EsLog.append(spark, dir, spark.range(10).select(payload), 1L)
+    val version = graft.meta.MetaLog.latestVersion(dir)
+    val state = graft.meta.MetaLog.load(dir)
+    val segDir = new java.io.File(dir, "seg-00000")
+    val segBefore = segDir.list().toSet
+    // the stats pass evaluates every row once; the write pass throws on its
+    // 51st row, half-way through the single partition's file
+    EsLogSpec.calls.set(0)
+    val flaky = udf { (id: Long) =>
+      if (EsLogSpec.calls.incrementAndGet() > 150) throw new IllegalStateException("write task died")
+      id.toString.getBytes("UTF-8")
+    }.asNondeterministic()
+    val e = intercept[Exception](EsLog.append(spark, dir,
+      spark.range(0, 100, 1, 1).select(flaky(col("id")).as("payload")), 1L))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(x => String.valueOf(x.getMessage).contains("write task died")), e)
+    assert(EsLogSpec.calls.get > 150, "the write pass never ran")
+    assert(graft.meta.MetaLog.latestVersion(dir) == version)
+    assert(graft.meta.MetaLog.load(dir) == state)
+    assert(segDir.list().toSet == segBefore, "the failed commit's directory was left behind")
+    assert(EsLog.scan(spark, dir).count() == 10)
   }
 
   test("catalog: listStreams/scanAll load each stream state once, in parallel") {
@@ -1709,4 +1772,9 @@ class EsLogSpec extends SparkTestBase {
     assertThrows[IllegalArgumentException](EsLog.groupOffset(dir, "a/b"))
     assertThrows[IllegalArgumentException](EsLog.commitGroupOffset(dir, "", 0L, None))
   }
+}
+
+object EsLogSpec {
+  /** Rows a test UDF has evaluated, across the tasks of one local session. */
+  val calls = new java.util.concurrent.atomic.AtomicInteger
 }
