@@ -48,7 +48,7 @@ object JaccardProf {
     }
 
     def capped() = Dedup.cappedShingles(docs, "doc_id", "text", k = 3,
-      maxDf = Dedup.DefaultMaxDf, cacheCapped = true)
+      maxDf = Dedup.DefaultMaxDf)
     stage("postings_cache") { capped().agg(count(lit(1))).collect(); () }
     stage("sizes") {
       OpUtil.shared(capped().groupBy("doc").agg(count(lit(1)).as("n")))

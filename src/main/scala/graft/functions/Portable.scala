@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.{GraftShims, MinHashExpr, ShingleHashesExpr}
 import org.apache.spark.sql.types.LongType
 
 /** Deterministic, engine-portable primitives shared by the dedup / similarity
@@ -14,8 +15,9 @@ import org.apache.spark.sql.types.LongType
   *    md5 is stable across platforms, 60 bits always fits a signed long.
   *  - word shingles are plain space-joined word k-grams over `split(text,' ')`.
   *
-  * All expressions are built from codegen'd built-ins (no UDFs), so they stay
-  * inside whole-stage codegen on the 100 TB path.
+  * All expressions are codegen'd built-ins or codegen'd `graftshim`
+  * expressions (no UDFs), so they stay inside whole-stage codegen on the
+  * 100 TB path.
   */
 object Portable {
 
@@ -89,6 +91,22 @@ object Portable {
     when(size(toks) >= k,
       transform(sequence(lit(0), size(toks) - k), i => concat_ws(" ", slice(toks, i + lit(1), lit(k)))))
       .otherwise(array().cast("array<string>"))
+  }
+
+  /** The sorted, distinct [[uhashBase]] values of `text`'s word k-grams:
+    * `array_sort(array_distinct(transform(wordShingles(text, k), uhashBase)))`,
+    * computed in one compiled pass per row
+    * ([[org.apache.spark.sql.graftshim.ShingleHashesExpr]]) with no gram
+    * string built. Empty for a null text or one of fewer than k words. */
+  def shingleHashes(text: Column, k: Int): Column =
+    GraftShims.column(ShingleHashesExpr(GraftShims.expr(text), k))
+
+  /** MinHash signature of a [[shingleHashes]] array: element i is the
+    * minimum of [[uhash]]`(i, h)` over its members, for i < numHashes, in
+    * one pass ([[org.apache.spark.sql.graftshim.MinHashExpr]]). */
+  def minHash(hms: Column, numHashes: Int): Column = {
+    val idx = 0 until numHashes
+    GraftShims.column(MinHashExpr(GraftShims.expr(hms), idx.map(uhA), idx.map(uhB), UHPrime))
   }
 
   /** DuckDB-SQL for [[wordShingles]] over column `text` (1-based lists). */

@@ -2,32 +2,40 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.{ExceptSortedExpr, GraftShims}
 import graft.functions.Portable
 
 /** Deduplication operators for large-scale document pipelines.
   *
   * All four families are declarative DataFrame plans so Catalyst handles
   * pushdown/pruning and every shuffle is an explicit hash aggregation or
-  * equi-join on a bounded key — nothing here is an all-pairs comparison:
+  * equi-join on a bounded key — nothing here is an all-pairs comparison.
+  * Per-document work is one compiled pass per row: a document's shingles
+  * become a sorted array of hashes ([[shingleSets]]) that its signature,
+  * its set size and every verified Jaccard read without exploding it.
   *
   *  - exact: one hash-aggregate on sha256(text). O(N) map + 1 shuffle.
   *  - ngramJaccard: inverted-index self-join on shingles. The join key is the
   *    shingle, so co-occurring docs meet on the shuffle; pairs are counted,
   *    never materialized per-token on the driver.
-  *  - minHashLsh: MinHash signatures (one md5 per shingle + a k-member
-  *    universal-hash family) banded into b groups; candidates = docs sharing
-  *    a (band, signature) bucket. At 100 TB the bucket join replaces the
-  *    quadratic all-pairs scan; the verify step only touches candidate pairs.
+  *  - minHashLsh: MinHash signatures (one md5 per shingle, no gram string,
+  *    and a k-member universal-hash family over the doc's hash array)
+  *    banded into b groups; candidates = docs sharing a (band, signature)
+  *    bucket. At 100 TB the bucket join replaces the quadratic all-pairs
+  *    scan; the verify step intersects only the candidate pairs' arrays.
   *  - simHash: 60-bit sign-sum fingerprint per doc; near-dup = small Hamming
   *    distance (joinable by fingerprint bands if needed).
+  *
+  * [[nearDupClusters]] labels a small edge set in driver memory and a
+  * large one in distributed rounds, with the same labels either way.
   *
   * Hashes are md5-based [[Portable]] primitives so an independent SQL engine
   * reproduces every value exactly (the driver's DuckDB oracle does).
   */
 object Dedup {
 
-  /** Default document-frequency cap for shingle posting lists (see
-    * [[cappedShingles]]): absolute, so it needs no pre-count of the corpus;
+  /** Default document-frequency cap for shingle sets (see
+    * [[shingleSets]]): absolute, so it needs no pre-count of the corpus;
     * at web scale 1000 docs sharing a shingle is firmly stop-shingle
     * territory, while small corpora (< 1000 docs) are never affected. */
   val DefaultMaxDf: Long = 1000L
@@ -39,47 +47,58 @@ object Dedup {
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("dups"))
       .select(idCol, "h", "dups")
 
-  /** Distinct (doc, shingle-hash) pairs with stop-shingles removed.
-    *
-    * Shingles are reduced to their 60-bit portable hash (`hm`, one md5 per
-    * occurrence) immediately after the explode, so every downstream shuffle —
-    * the distinct, the df aggregate, the posting-list self-joins — carries an
-    * 8-byte long instead of a k-word string. Jaccard over hashed shingles is
-    * the standard formulation (collisions at 2^-31 are noise); the SQL oracle
-    * applies the identical reduction, so results stay bit-equal.
+  /** Per-document shingle-hash sets with stop-shingles removed: one row per
+    * distinct document id, `hms` = the sorted, distinct [[Portable.uhashBase]]
+    * values of its word k-grams ([[Portable.shingleHashes]], one compiled
+    * pass per document — no gram string, no exploded row, no shuffle before
+    * the per-document merge). Rows sharing an id merge into the union of
+    * their sets. Jaccard over
+    * hashed shingles is the standard formulation (collisions at 2^-31 are
+    * noise); the SQL oracle applies the identical reduction, so results stay
+    * bit-equal.
     *
     * The df cap: a shingle in M documents contributes M² rows to any
     * posting-list self-join, so common k-grams ("of the and") make the join
     * quadratic on real corpora even though it is an equi-join. Hashes with
-    * document frequency > maxDf are dropped before the join — the heavy set
-    * is tiny by construction, so it broadcasts, and the anti join costs one
-    * map-side-combined aggregate. maxDf <= 0 disables the cap. */
-  /** @param cacheCapped also [[OpUtil.shared]]-cache the CAPPED postings.
-    *   The raw-postings cache feeds exactly two subtrees (the heavy-hitter
-    *   build and the anti-join probe side); a caller that consumes the
-    *   capped output N > 1 times otherwise re-runs the df aggregate AND the
-    *   anti-join once PER consumer — dedup_jaccard's plan carried four
-    *   copies of that subtree before r17 (§2.4: a full corpus-sized
-    *   aggregate exchange per copy). Leave false for single-consumer
-    *   callers, where the second cache is a wasted materialization. */
-  private[graft] def cappedShingles(docs: DataFrame, idCol: String, textCol: String,
-                                    k: Int, maxDf: Long,
-                                    cacheCapped: Boolean = false): DataFrame = {
-    // Codegen-friendly shingle explode (OpUtil.explodedWordShingles — the
-    // HOF transform lambda interpreter dominated this stage before).
-    // shared(): the postings feed the heavy-hitter build, both self-join
-    // sides, and the per-doc sizes — explode+md5+distinct must run once.
-    val sh = OpUtil.shared(OpUtil.explodedWordShingles(docs, idCol, textCol, k)
-      .select(col("doc"), Portable.uhashBase(col("g")).as("hm"))
-      .distinct())
-    if (maxDf <= 0) sh
+    * document frequency > maxDf are dropped from every set — the heavy set
+    * is exact (one hash aggregate over the sets' members) and tiny by
+    * construction, so it is collected once and removed per row by binary
+    * search. maxDf <= 0 disables the cap. The uncapped sets are
+    * [[OpUtil.shared]]-cached: the heavy-set job and every consumer read
+    * them, and md5 runs once per shingle. */
+  private[graft] def shingleSets(docs: DataFrame, idCol: String, textCol: String,
+                                 k: Int, maxDf: Long): DataFrame = {
+    val raw = OpUtil.shared(rawShingleSets(docs, idCol, textCol, k))
+    if (maxDf <= 0) raw
     else {
-      val heavy = sh.groupBy("hm").agg(count(lit(1)).as("df"))
-        .where(col("df") > maxDf).select("hm")
-      val capped = sh.join(broadcast(heavy), Seq("hm"), "left_anti")
-      if (cacheCapped) OpUtil.shared(capped) else capped
+      val spark = docs.sparkSession
+      import spark.implicits._
+      val heavy = raw.select(explode(col("hms")).as("hm"))
+        .groupBy("hm").agg(count(lit(1)).as("df"))
+        .where(col("df") > maxDf).select("hm").as[Long].collect()
+      if (heavy.isEmpty) raw
+      else raw.select(col("doc"), GraftShims.column(
+        ExceptSortedExpr(GraftShims.expr(col("hms")), heavy.toSeq)).as("hms"))
     }
   }
+
+  /** Uncapped [[shingleSets]]: per-row hash arrays merged per document id. */
+  private def rawShingleSets(docs: DataFrame, idCol: String, textCol: String,
+                             k: Int): DataFrame =
+    OpUtil.rebalance(docs)
+      .select(col(idCol).as("doc"), Portable.shingleHashes(col(textCol), k).as("hms"))
+      .groupBy("doc").agg(collect_list(col("hms")).as("l"))
+      .select(col("doc"), when(size(col("l")) === 1, col("l")(0))
+        .otherwise(array_sort(array_distinct(flatten(col("l"))))).as("hms"))
+
+  /** Distinct (doc, hm) posting rows of [[shingleSets]] — one explode of
+    * longs, for the callers that join on the shingle hash. */
+  private[graft] def cappedShingles(docs: DataFrame, idCol: String, textCol: String,
+                                    k: Int, maxDf: Long): DataFrame =
+    postings(shingleSets(docs, idCol, textCol, k, maxDf))
+
+  private def postings(sets: DataFrame): DataFrame =
+    sets.select(col("doc"), explode(col("hms")).as("hm"))
 
   /** N-gram (word shingle) Jaccard similarity join: all pairs (i < j) with
     * |shingles_i ∩ shingles_j| / |union| >= threshold.
@@ -90,13 +109,10 @@ object Dedup {
   def ngramJaccard(docs: DataFrame, idCol: String, textCol: String,
                    k: Int = 3, threshold: Double = 0.5,
                    maxDf: Long = DefaultMaxDf): DataFrame = {
-    val sh = cappedShingles(docs, idCol, textCol, k, maxDf, cacheCapped = true)
-    // `sizes` feeds both post-pair joins, and the static plan shows its
-    // aggregate once per side — but the renames sit ABOVE an identical
-    // hashpartitioning(doc) exchange, which AQE's runtime stage reuse
-    // executes once; a shared() cache here measured x1.02 (nothing) and
-    // was reverted (r18 — same finding as dedup_minhash's band join).
-    val sizes = sh.groupBy("doc").agg(count(lit(1)).as("n"))
+    val sets = shingleSets(docs, idCol, textCol, k, maxDf)
+    val sh = postings(sets)
+    // a set's size is its array's length: no per-doc aggregate
+    val sizes = sets.select(col("doc"), size(col("hms")).cast("long").as("n"))
     val pairs = sh.as("a").join(sh.as("b"),
         col("a.hm") === col("b.hm") && col("a.doc") < col("b.doc"))
       .groupBy(col("a.doc").as("i"), col("b.doc").as("j"))
@@ -117,12 +133,15 @@ object Dedup {
   def minHashSignatures(docs: DataFrame, idCol: String, textCol: String,
                         k: Int, numHashes: Int,
                         maxDf: Long = DefaultMaxDf): DataFrame =
-    signaturesFrom(cappedShingles(docs, idCol, textCol, k, maxDf), numHashes)
+    signatures(shingleSets(docs, idCol, textCol, k, maxDf), numHashes)
+      .select(col("doc") +: (0 until numHashes).map(i => col("sig")(i).as(s"m$i")): _*)
 
-  private def signaturesFrom(sh: DataFrame, numHashes: Int): DataFrame = {
-    val mins = (0 until numHashes).map(i => min(Portable.uhash(i, col("hm"))).as(s"m$i"))
-    sh.groupBy("doc").agg(mins.head, mins.tail: _*)
-  }
+  /** (doc, sig) with `sig` the MinHash array, computed per row from the
+    * doc's set ([[Portable.minHash]]); a doc with no capped shingle has no
+    * signature (there is no minimum over nothing). */
+  private def signatures(sets: DataFrame, numHashes: Int): DataFrame =
+    sets.where(size(col("hms")) > 0)
+      .select(col("doc"), Portable.minHash(col("hms"), numHashes).as("sig"))
 
   /** MinHash + LSH candidate pairs: signatures banded into `bands` groups of
     * `numHashes/bands` rows; docs sharing any (band, signature) bucket are
@@ -132,22 +151,21 @@ object Dedup {
   def minHashLshCandidates(docs: DataFrame, idCol: String, textCol: String,
                            k: Int = 3, numHashes: Int = 16, bands: Int = 4,
                            maxDf: Long = DefaultMaxDf): DataFrame =
-    bandedCandidates(cappedShingles(docs, idCol, textCol, k, maxDf), numHashes, bands)
+    bandedCandidates(shingleSets(docs, idCol, textCol, k, maxDf), numHashes, bands)
 
   /** Banded signature rows (doc, band, sig) — the LSH bucket unit, shared by
     * the one-shot candidate join and the materialized incremental index. */
-  private def bandedSignatures(sh: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+  private def bandedSignatures(sets: DataFrame, numHashes: Int, bands: Int): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
-    val sigs = signaturesFrom(sh, numHashes)
     val bandSigs = (0 until bands).map { b =>
-      concat_ws(",", (0 until r).map(i => col(s"m${b * r + i}")): _*).as(s"band$b")
+      concat_ws(",", (0 until r).map(i => col("sig")(b * r + i)): _*)
     }
-    sigs.select(col("doc") +: bandSigs: _*).select(col("doc"),
-      posexplode(array((0 until bands).map(b => col(s"band$b")): _*)).as(Seq("band", "sig")))
+    signatures(sets, numHashes).select(col("doc"),
+      posexplode(array(bandSigs: _*)).as(Seq("band", "sig")))
   }
 
-  private def bandedCandidates(sh: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+  private def bandedCandidates(sets: DataFrame, numHashes: Int, bands: Int): DataFrame = {
     // NOT shared()-cached (measured r18): the static plan shows the
     // signature subtree once per self-join side, but both sides feed the
     // SAME hashpartitioning(band, sig) exchange, and AQE's runtime stage
@@ -156,7 +174,7 @@ object Dedup {
     // bench head 0.78 → 0.99 s (reverted; contrast ts_similarity, where
     // the duplicate sits behind a BroadcastExchange boundary stage reuse
     // cannot cross and a shared() cache wins).
-    val exploded = bandedSignatures(sh, numHashes, bands)
+    val exploded = bandedSignatures(sets, numHashes, bands)
     exploded.as("a").join(exploded.as("b"),
         col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
           col("a.doc") < col("b.doc"))
@@ -171,7 +189,7 @@ object Dedup {
   def buildMinHashIndex(docs: DataFrame, idCol: String, textCol: String,
                         k: Int = 3, numHashes: Int = 16, bands: Int = 4,
                         maxDf: Long = DefaultMaxDf): DataFrame =
-    bandedSignatures(cappedShingles(docs, idCol, textCol, k, maxDf), numHashes, bands)
+    bandedSignatures(shingleSets(docs, idCol, textCol, k, maxDf), numHashes, bands)
 
   /** Broadcast bound of [[probeMinHashIndexAt]]'s incoming signature set
     * (docs × bands rows): past it the probe fails fast naming the knob
@@ -347,7 +365,7 @@ object Dedup {
                         k: Int = 3, numHashes: Int = 16, bands: Int = 4,
                         maxDf: Long = DefaultMaxDf): DataFrame = {
     val probe = bandedSignatures(
-      cappedShingles(newDocs, idCol, textCol, k, maxDf), numHashes, bands)
+      shingleSets(newDocs, idCol, textCol, k, maxDf), numHashes, bands)
     index.as("a").join(probe.as("b"),
         col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
           col("a.doc") =!= col("b.doc"))
@@ -355,22 +373,92 @@ object Dedup {
       .distinct()
   }
 
+  /** Largest symmetric edge set [[nearDupClusters]] labels in driver
+    * memory: about 100 bytes a collected edge, so the bound holds the
+    * driver-side copy near 20 MB. Above it the distributed rounds run. */
+  val LocalClusterMaxEdges: Long = 200000L
+
   /** Connected components over a near-duplicate pair list — the step every
     * dedup pipeline ends with: assign each document in any pair a cluster id
     * (the smallest doc id reachable through near-dup edges), then keep one
-    * representative per cluster. Distributed min-label propagation: each
-    * round joins labels across edges and takes the elementwise min, with an
-    * early exit at the fixpoint. Near-dup graphs are near-cliques, so
-    * convergence takes O(cluster diameter) rounds (2–3 in practice; a path
-    * of length d needs d rounds — bound with `maxIter`). Every round is a
-    * pair of bounded-key equi-joins, nothing driver-side but the
-    * convergence check. */
+    * representative per cluster. Bounded synchronous min-label propagation:
+    * each round every document takes the least label among itself and its
+    * neighbours, with an early exit at the fixpoint. Near-dup graphs are
+    * near-cliques, so convergence takes O(cluster diameter) rounds (2–3 in
+    * practice; a path of length d needs d rounds — bound with `maxIter`,
+    * past which the labels are the last round's, not converged).
+    *
+    * The symmetric edges are materialized once and counted. At most
+    * [[LocalClusterMaxEdges]] of them (integral or string ids) are
+    * collected and the same rounds run in driver memory — same `maxIter`,
+    * same early exit, same seed set, so the labels equal the distributed
+    * path's on every input — and a small local frame comes back: one job
+    * instead of a cached join and a job per round. A larger edge set runs
+    * the rounds distributed, each a pair of bounded-key equi-joins with
+    * nothing driver-side but the convergence check. */
   def nearDupClusters(pairs: DataFrame, iCol: String = "i", jCol: String = "j",
-                      maxIter: Int = 20): DataFrame = {
-    val edges = OpUtil.shared(
+                      maxIter: Int = 20): DataFrame =
+    nearDupClusters(pairs, iCol, jCol, maxIter, LocalClusterMaxEdges)
+
+  /** [[nearDupClusters]] with the driver-side bound as an argument (0 forces
+    * the distributed rounds on any non-empty edge set). */
+  private[graft] def nearDupClusters(pairs: DataFrame, iCol: String, jCol: String,
+                                     maxIter: Int, localMaxEdges: Long): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.types._
+    val (edges, edgesRdd) = OpUtil.sharedWithHandle(
       pairs.select(col(iCol).as("a"), col(jCol).as("b"))
         .union(pairs.select(col(jCol).as("a"), col(iCol).as("b")))
         .distinct())
+    val a = edges.schema("a")
+    val localIds = a.dataType match {
+      case LongType | IntegerType | ShortType | ByteType | StringType => true
+      case _ => false
+    }
+    if (localIds && edgesRdd.count() <= localMaxEdges) {
+      val rows = edgesRdd.collect().map(_.asInstanceOf[InternalRow])
+      edgesRdd.unpersist(blocking = false)
+      GraftShims.dfFromInternalRows(pairs.sparkSession,
+        localLabels(rows, a.dataType, maxIter),
+        StructType(Seq(a.copy(name = "doc"), a.copy(name = "cluster"))))
+    } else distributedLabels(edges, maxIter)
+  }
+
+  /** The propagation over collected symmetric edges (a, b). Documents are
+    * numbered in Spark's order of their ids, so a least label is a least
+    * number. A null id joins nothing, as in the distributed rounds: it
+    * keeps a null label. */
+  private def localLabels(edges: Array[org.apache.spark.sql.catalyst.InternalRow],
+                          dt: org.apache.spark.sql.types.DataType,
+                          maxIter: Int): Seq[org.apache.spark.sql.catalyst.InternalRow] = {
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    val linked = edges.filter(e => !e.isNullAt(0) && !e.isNullAt(1))
+    val ids = edges.iterator.filterNot(_.isNullAt(0)).map(_.get(0, dt)).toArray.distinct
+      .sorted(org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt))
+    val num = ids.iterator.zipWithIndex.toMap
+    val src = linked.map(e => num(e.get(0, dt)))
+    val dst = linked.map(e => num(e.get(1, dt)))
+    var label = Array.range(0, ids.length)
+    var it = 0
+    var converged = false
+    while (!converged && it < maxIter) {
+      it += 1
+      val next = label.clone()
+      var e = 0
+      while (e < src.length) {
+        val l = label(dst(e))
+        if (l < next(src(e))) next(src(e)) = l
+        e += 1
+      }
+      converged = java.util.Arrays.equals(next, label)
+      label = next
+    }
+    val nulls = if (edges.exists(_.isNullAt(0))) Seq(new GenericInternalRow(2)) else Nil
+    ids.indices.map(v => new GenericInternalRow(Array[Any](ids(v), ids(label(v))))) ++ nulls
+  }
+
+  /** The distributed rounds over the cached edges. */
+  private def distributedLabels(edges: DataFrame, maxIter: Int): DataFrame = {
     val seed: (DataFrame, org.apache.spark.rdd.RDD[_]) = OpUtil.sharedWithHandle(
       edges.select(col("a").as("doc")).distinct().withColumn("cluster", col("doc")))
     var labels = seed._1
@@ -437,8 +525,8 @@ object Dedup {
   /** The benchmark side's distinct capped gram-hash set — exactly
     * `cappedShingles(benchmark, ...).select("hm").distinct()`, derived in
     * ONE linear lineage: the df aggregate that the cap already needs IS the
-    * distinct gram table, so `df <= maxDf` replaces the heavy-set anti-join
-    * plus a second distinct exchange (r17, §2.4).
+    * distinct gram table, so `df <= maxDf` replaces the heavy-set job and
+    * its per-set filter (r17, §2.4).
     *
     * Every caller broadcasts the result, so the `maxBenchGrams` contract is
     * enforced INLINE while the broadcast's child evaluates — a dedicated
@@ -451,9 +539,7 @@ object Dedup {
                            k: Int, maxDf: Long, maxBenchGrams: Long): DataFrame = {
     val spark = benchmark.sparkSession
     import spark.implicits._
-    val byGram = OpUtil.explodedWordShingles(benchmark, idCol, textCol, k)
-      .select(col("doc"), Portable.uhashBase(col("g")).as("hm"))
-      .distinct()
+    val byGram = postings(rawShingleSets(benchmark, idCol, textCol, k))
       .groupBy("hm").agg(count(lit(1)).as("df"))
     val b = (if (maxDf <= 0) byGram else byGram.where(col("df") <= maxDf))
       .select("hm").as[Long]
@@ -495,8 +581,8 @@ object Dedup {
     * under-weights. Candidates come from a CROSS-frame (band, sig)
     * equi-join — the benchmark's banded signatures are benchmark-sized and
     * broadcast — and each candidate pair is verified with the true Jaccard
-    * through the same inverted-index intersection as [[minHashNearDups]]
-    * (linear in the candidates' shingle lists, never |si|×|sj|).
+    * by the same per-pair set intersection as [[minHashNearDups]]
+    * (linear in the two sets' sizes).
     *
     * @return one row per flagged corpus doc: `(idCol, bench_doc, jaccard)`
     *         with its best-matching benchmark doc (max jaccard, ties to
@@ -507,24 +593,21 @@ object Dedup {
                          threshold: Double = 0.5,
                          maxDf: Long = DefaultMaxDf,
                          maxBenchSigs: Long = MaxBenchSigs): DataFrame = {
-    val bsh = cappedShingles(benchmark, idCol, textCol, k, maxDf, cacheCapped = true)
-    val bSigs = OpUtil.shared(bandedSignatures(bsh, numHashes, bands))
-    fuzzyDecontCore(
-      // corpus postings feed three subtrees in the core (signatures, sizes,
-      // the verify join) — cache the CAPPED output once (r17, §2.4)
-      cappedShingles(corpus, idCol, textCol, k, maxDf, cacheCapped = true),
-      bSigs, bsh, idCol, numHashes, bands, threshold, maxBenchSigs)
+    val bsets = shingleSets(benchmark, idCol, textCol, k, maxDf)
+    val bSigs = OpUtil.shared(bandedSignatures(bsets, numHashes, bands))
+    fuzzyDecontCore(shingleSets(corpus, idCol, textCol, k, maxDf),
+      bSigs, bsets, idCol, numHashes, bands, threshold, maxBenchSigs)
   }
 
   /** Shared verify-join core of the fuzzy decontamination family: corpus
-    * shingles vs a (signatures, shingles) benchmark artifact — in memory
+    * shingle sets vs a (signatures, shingle sets) benchmark artifact — in memory
     * ([[decontaminateFuzzy]]) or from a persisted index
     * ([[decontaminateFuzzyAt]]). The benchmark's banded signatures
     * BROADCAST, so like every input-proportional broadcast in this repo the
     * size is contract-capped with a named knob (`maxBenchSigs`, house style
     * of `maxProbeSigs`/`maxProbeChunks`): a pathological "benchmark suite"
     * fails fast instead of OOMing the broadcast silently. */
-  private def fuzzyDecontCore(c: DataFrame, bSigs: DataFrame, bsh: DataFrame,
+  private def fuzzyDecontCore(c: DataFrame, bSigs: DataFrame, bsets: DataFrame,
                               idCol: String, numHashes: Int, bands: Int,
                               threshold: Double, maxBenchSigs: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -540,17 +623,7 @@ object Dedup {
         col("a.band") === col("b.band") && col("a.sig") === col("b.sig"))
       .select(col("a.doc").as("i"), col("b.doc").as("j"))
       .distinct()
-    val sizesC = c.groupBy("doc").agg(count(lit(1)).as("n"))
-    val sizesB = bsh.groupBy("doc").agg(count(lit(1)).as("n"))
-    val inter = cands
-      .join(c.as("x"), col("i") === col("x.doc"))
-      .join(bsh.as("y"), col("j") === col("y.doc") && col("x.hm") === col("y.hm"))
-      .groupBy("i", "j").agg(count(lit(1)).as("inter"))
-    val scored = inter
-      .join(sizesC.withColumnRenamed("doc", "i").withColumnRenamed("n", "ni"), "i")
-      .join(sizesB.withColumnRenamed("doc", "j").withColumnRenamed("n", "nj"), "j")
-      .withColumn("jaccard", col("inter") / (col("ni") + col("nj") - col("inter")))
-      .where(col("jaccard") >= threshold)
+    val scored = verified(cands, c, bsets, threshold)
     val w = Window.partitionBy("i").orderBy(col("jaccard").desc, col("j").asc)
     scored.withColumn("rk", row_number().over(w)).where(col("rk") === 1)
       .select(col("i").as(idCol), col("j").as("bench_doc"), col("jaccard"))
@@ -561,24 +634,24 @@ object Dedup {
     * shingle + sign the benchmark suite ONCE, then screen tomorrow's crawl
     * against the artifact without re-reading benchmark text. Two trees ride
     * one [[IndexCommit]] pointer: the banded signatures (main, broadcast at
-    * probe time) and the benchmark shingles (sidecar, the Jaccard-verify
-    * side), plus a params sidecar so a probe can never mismatch
-    * k/numHashes/bands with the build. */
+    * probe time) and the benchmark's (doc, hms) shingle sets (sidecar, the
+    * Jaccard-verify side), plus a params sidecar so a probe can never
+    * mismatch k/numHashes/bands with the build. */
   def writeFuzzyDecontIndex(benchmark: DataFrame, idCol: String, textCol: String,
                             dir: String, k: Int = 3, numHashes: Int = 16,
                             bands: Int = 4, maxDf: Long = DefaultMaxDf): Unit = {
     val spark = benchmark.sparkSession
     import spark.implicits._
-    val bsh = cappedShingles(benchmark, idCol, textCol, k, maxDf, cacheCapped = true)
+    val bsets = shingleSets(benchmark, idCol, textCol, k, maxDf)
     val paramsName = IndexCommit.sidecarName(dir, "params")
     Seq((k, numHashes, bands, maxDf, benchmark.schema(idCol).dataType.catalogString))
       .toDF("k", "num_hashes", "bands", "max_df", "id_type")
       .write.mode("overwrite").parquet(s"$dir/$paramsName")
     val shinglesName = IndexCommit.sidecarName(dir, "shingles")
-    bsh.write.mode("overwrite").parquet(s"$dir/$shinglesName")
+    bsets.write.mode("overwrite").parquet(s"$dir/$shinglesName")
     IndexCommit.commitBase(dir, "sigs",
       Map("params" -> paramsName, "shingles" -> shinglesName)) { tree =>
-      bandedSignatures(bsh, numHashes, bands)
+      bandedSignatures(bsets, numHashes, bands)
         .write.mode("overwrite").parquet(tree)
     }
   }
@@ -595,12 +668,12 @@ object Dedup {
     val (k, nh, bands, maxDf) = (p.getAs[Int]("k"), p.getAs[Int]("num_hashes"),
       p.getAs[Int]("bands"), p.getAs[Long]("max_df"))
     val bSigs = snap.dirs.map(spark.read.parquet(_)).reduce(_.unionByName(_))
-    val bsh = spark.read.parquet(snap.sidecar("shingles"))
-    fuzzyDecontCore(
-      // corpus postings feed three subtrees in the core (signatures, sizes,
-      // the verify join) — cache the CAPPED output once (r17, §2.4)
-      cappedShingles(corpus, idCol, textCol, k, maxDf, cacheCapped = true),
-      bSigs, bsh, idCol, nh, bands, threshold, maxBenchSigs)
+    // artifacts written before the sets format hold distinct (doc, hm) rows
+    val stored = spark.read.parquet(snap.sidecar("shingles"))
+    val bsets = if (stored.columns.contains("hms")) stored
+      else stored.groupBy("doc").agg(array_sort(collect_list(col("hm"))).as("hms"))
+    fuzzyDecontCore(shingleSets(corpus, idCol, textCol, k, maxDf),
+      bSigs, bsets, idCol, nh, bands, threshold, maxBenchSigs)
   }
 
   def decontaminateBloom(corpus: DataFrame, benchmark: DataFrame, idCol: String,
@@ -751,23 +824,28 @@ object Dedup {
                       k: Int = 3, numHashes: Int = 16, bands: Int = 4,
                       threshold: Double = 0.5,
                       maxDf: Long = DefaultMaxDf): DataFrame = {
-    // one shared postings frame feeds candidates, sizes, and the verify join
-    val sh = cappedShingles(docs, idCol, textCol, k, maxDf, cacheCapped = true)
-    val cands = bandedCandidates(sh, numHashes, bands)
-    val sizes = sh.groupBy("doc").agg(count(lit(1)).as("n"))
-    // intersection via composite equi-join (doc, shingle hash) — linear in
-    // the candidates' shingle lists, never |si| x |sj| per pair
-    val inter = cands
-      .join(sh.as("x"), col("i") === col("x.doc"))
-      .join(sh.as("y"), col("j") === col("y.doc") && col("x.hm") === col("y.hm"))
-      .groupBy("i", "j").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("doc", "i").withColumnRenamed("n", "ni"), "i")
-      .join(sizes.withColumnRenamed("doc", "j").withColumnRenamed("n", "nj"), "j")
+    // one set frame feeds the signatures and both sides of the verify
+    val sets = shingleSets(docs, idCol, textCol, k, maxDf)
+    verified(bandedCandidates(sets, numHashes, bands), sets, sets, threshold)
+  }
+
+  /** Candidate pairs (i, j) scored with their exact Jaccard from the two
+    * docs' sets: the intersection of two arrays per pair, its size over
+    * the union's, `ni` and `nj` the arrays' lengths. Cost is linear in the
+    * candidates' set sizes; no shingle row is joined. Candidates share a
+    * MinHash bucket, hence at least one shingle (each family member is a
+    * bijection on [0, 2^31−1)), so no candidate's intersection is empty. */
+  private def verified(cands: DataFrame, left: DataFrame, right: DataFrame,
+                       threshold: Double): DataFrame =
+    cands
+      .join(left.select(col("doc").as("i"), col("hms").as("hi")), "i")
+      .join(right.select(col("doc").as("j"), col("hms").as("hj")), "j")
+      .select(col("i"), col("j"),
+        size(array_intersect(col("hi"), col("hj"))).as("inter"),
+        size(col("hi")).as("ni"), size(col("hj")).as("nj"))
       .withColumn("jaccard", col("inter") / (col("ni") + col("nj") - col("inter")))
       .where(col("jaccard") >= threshold)
       .select(col("i"), col("j"), col("jaccard"))
-  }
 
   /** SEGMENT-level exact dedup across the corpus — the CCNet/RefinedWeb
     * "remove duplicated lines" curation step, which document-level dedup

@@ -94,10 +94,13 @@ object Multimodal {
     * memoize safely by absolute path: before r18 every
     * [[mediaDedupProbeAt]] call re-read the same tiny parquet through a
     * full Spark job (~0.15 s of driver latency per probe at sf0.1, once
-    * per micro-batch in the streaming screen). Legacy bare-named params
-    * files (pre-sidecar indexes) can be overwritten in place by a rebuild
-    * and are NEVER memoized. Bounded LRU, metadata only — the same class
-    * of cache as Spark's own file-listing session cache. */
+    * per micro-batch in the streaming screen). Only a name that carries a
+    * generation suffix is unique: a FIRST build registers the bare
+    * `params` name ([[IndexCommit.sidecarName]]), which a delete and
+    * rebuild at the same path rewrites in place, as does a rebuild of a
+    * pre-sidecar index — bare-named params files are NEVER memoized.
+    * Bounded LRU, metadata only — the same class of cache as Spark's own
+    * file-listing session cache. */
   private val paramsMemo =
     new java.util.LinkedHashMap[String, org.apache.spark.sql.Row](16, 0.75f, true) {
       override def removeEldestEntry(
@@ -107,7 +110,7 @@ object Multimodal {
   private def readParams(spark: SparkSession,
                          snap: IndexCommit.ReadSnapshot): org.apache.spark.sql.Row = {
     val path = snap.sidecar("params")
-    val memoizable = snap.sidecars.contains("params")
+    val memoizable = snap.sidecars.get("params").exists(_ != "params")
     if (memoizable) {
       val got = paramsMemo.synchronized(paramsMemo.get(path))
       if (got != null) return got
@@ -584,7 +587,13 @@ object Multimodal {
     * (default [[MaxProbeChunks]]) the probe FAILS FAST naming the knob
     * rather than OOMing the driver mid-broadcast — the scaladoc's
     * "micro-batch-sized" contract, enforced. Corpus-vs-corpus jobs belong
-    * on [[binaryNearDupsCdc]] (shuffle equi-join, no broadcast). */
+    * on [[binaryNearDupsCdc]] (shuffle equi-join, no broadcast).
+    *
+    * `incoming` must be DETERMINISTIC: it is evaluated twice, once for the
+    * guard count and the probed buckets and once for the broadcast build.
+    * A nondeterministic frame (an unseeded sample, say) could pass the
+    * guard with rows other than the ones it broadcasts, and probe buckets
+    * other than its own; persist such a frame before probing with it. */
   def mediaDedupProbeAt(spark: SparkSession, dir: String, incoming: DataFrame,
                         idCol: String, payloadCol: String,
                         minShared: Int = 4,

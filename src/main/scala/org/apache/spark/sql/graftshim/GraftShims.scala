@@ -77,6 +77,15 @@ object GraftShims {
                         schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema, isStreaming = false)
 
+  /** A small driver-side result as a local frame (a `LocalRelation`):
+    * internal rows, which must already match `schema`. */
+  def dfFromInternalRows(spark: SparkSession,
+                         rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
+                         schema: org.apache.spark.sql.types.StructType): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
   /** Wrap a catalyst Expression as a public Column (Spark 4 moved Column to
     * the ColumnNode API; this is the classic-module bridge every custom
     * Expression needs to surface in the DataFrame DSL). */

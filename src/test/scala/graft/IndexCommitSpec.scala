@@ -308,6 +308,43 @@ class IndexCommitSpec extends SparkTestBase {
       "probe after rebuild must use the rebuilt generation's divisor")
   }
 
+  test("media library deleted out of band and rebuilt at the same path: probes see the new params") {
+    import spark.implicits._
+    // a FIRST build registers the bare `params` sidecar name; deleting the
+    // directory and building again writes that same name with other
+    // params, so a probe in the same JVM must not serve the memoized row.
+    // Edited copies of one random payload: how many chunks they share
+    // depends on the divisor.
+    val base = Array.fill(600)(0.toByte)
+    new scala.util.Random(7).nextBytes(base)
+    val docs = (0L until 6L).map { i =>
+      val b = base.clone()
+      (0 until 4).foreach(j => b(i.toInt * 90 + j) = (b(i.toInt * 90 + j) + 1).toByte)
+      (i, b)
+    }.toDF("media_id", "payload")
+    val root = tmpDir("ixc-media-oob-")
+    def build(divisor: Int): Unit = Multimodal.writeMediaLibraryIndex(docs, "media_id",
+      "payload", root, window = 8, divisor = divisor, maxDf = 64, nBuckets = 8)
+    val probe = docs.limit(2)
+    def viaIndex() = Multimodal.mediaDedupProbeAt(spark, root, probe,
+      "media_id", "payload", minShared = 1)
+      .as[(Long, Long, Long)].collect().toSet
+    def inMemory(divisor: Int) = Multimodal.mediaDedupProbe(
+      Multimodal.cdcChunkHashes(docs, "media_id", "payload",
+        window = 8, divisor = divisor, maxDf = 64)
+        .select(col("media_id").as("existing_id"), col("ch")),
+      probe, "media_id", "payload", window = 8, divisor = divisor,
+      minShared = 1).as[(Long, Long, Long)].collect().toSet
+    build(16)
+    assert(viaIndex() === inMemory(16))
+    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(root), true))
+    build(32)
+    assert(inMemory(32) != inMemory(16), "fixture: the two divisors must probe differently")
+    assert(viaIndex() === inMemory(32),
+      "probe after an out-of-band delete and rebuild must use the new build's divisor")
+  }
+
   test("appended IVF index: partition pruning engages on EVERY live tree") {
     // the 100 TB claim behind the union read: a probe filter pushes through
     // the tree union into each FileSourceScanExec, so base AND delta trees

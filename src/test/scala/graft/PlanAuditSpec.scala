@@ -1004,6 +1004,82 @@ class PlanAuditSpec extends SparkTestBase {
     assert(fast == hof, s"sizes ${fast.size} vs ${hof.size}")
   }
 
+  test("ShingleHashesExpr equals the composed shingle-hash Column form, codegen and interpreted") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import graft.functions.Portable
+    // empty words make double, leading and trailing spaces; short lists
+    // make texts of fewer than k words; some words are not ASCII
+    val word = Gen.frequency(
+      6 -> Gen.oneOf("a", "bb", "the", "of", "x1"),
+      3 -> Gen.oneOf("é", "日本", "naïve", "\uD83D\uDE42", "Ωmega"),
+      2 -> Gen.const(""))
+    val text: Gen[Option[Array[Byte]]] = Gen.frequency(
+      1 -> Gen.const(None),
+      1 -> Gen.const(Some(Array.emptyByteArray)),
+      12 -> Gen.choose(0, 10).flatMap(n => Gen.listOfN(n, word))
+        .map(ws => Some(ws.mkString(" ").getBytes("UTF-8"))))
+    // malformed UTF-8 too: decoded texts carry U+FFFD where the bytes break
+    val malformed = Seq(Array[Byte](0x61, 0x20, 0xC3.toByte, 0x20, 0x62, 0x20, 0xFF.toByte),
+      Array[Byte](0xE6.toByte, 0x97.toByte, 0x20, 0x20, 0x61, 0x20, 0x62))
+    val params = Gen.Parameters.default.withSize(10)
+    val schema = StructType(Seq(StructField("id", LongType), StructField("b", BinaryType)))
+    def compare(k: Int): Unit = for (seed <- 1L to 3L) {
+      val texts = Gen.listOfN(120, text).pureApply(params, Seed(seed)) ++ malformed.map(Some(_))
+      val rows = texts.zipWithIndex.map { case (t, i) => Row(i.toLong, t.orNull) }
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+        .select(col("id"), col("b").cast("string").as("text"))
+      val composed = array_sort(array_distinct(transform(
+        Portable.wordShingles(col("text"), k), g => Portable.uhashBase(g))))
+      val bad = df.select(col("id"), col("text"),
+          Portable.shingleHashes(col("text"), k).as("fused"), composed.as("composed"))
+        .where(not(col("fused") <=> col("composed"))).collect()
+      assert(bad.isEmpty, s"k=$k seed=$seed: ${bad.take(3).mkString("; ")}")
+    }
+    for (k <- Seq(1, 3)) compare(k)
+    val interpreted = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val before = interpreted.map { case (key, _) => key -> spark.conf.getOption(key) }
+    interpreted.foreach { case (key, v) => spark.conf.set(key, v) }
+    try for (k <- Seq(1, 3)) compare(k)
+    finally before.foreach {
+      case (key, Some(v)) => spark.conf.set(key, v)
+      case (key, None) => spark.conf.unset(key)
+    }
+  }
+
+  test("shingle sets merge rows sharing an id and keep the exact df cap") {
+    import spark.implicits._
+    import graft.functions.Portable
+    // ids 1 and 3 each span two rows; "a b c" is in every doc (df 4)
+    val docs = Seq(
+      (1L, "a b c one two three"), (1L, "a b c four five six"),
+      (2L, "a b c one two three seven"), (3L, "a b c x y"),
+      (3L, "nine ten eleven"), (4L, "a b c"), (5L, "too short")
+    ).toDF("doc_id", "text")
+    val exploded = graft.operators.OpUtil.explodedWordShingles(docs, "doc_id", "text", 3)
+      .select(col("doc"), Portable.uhashBase(col("g")).as("hm")).distinct()
+    def rows(df: DataFrame): Set[(Long, Long)] =
+      df.select("doc", "hm").as[(Long, Long)].collect().toSet
+    for (maxDf <- Seq(0L, 3L)) {
+      // the distinct (doc, hash) postings, df-capped by anti-join
+      val heavy = exploded.groupBy("hm").count().where(col("count") > maxDf).select("hm")
+      val postings = if (maxDf <= 0) exploded else exploded.join(heavy, Seq("hm"), "left_anti")
+      assert(rows(Dedup.cappedShingles(docs, "doc_id", "text", 3, maxDf)) == rows(postings),
+        s"maxDf=$maxDf")
+      // signatures: per-row minimums over the merged set equal the
+      // per-document aggregate over the posting rows
+      val mins = (0 until 4).map(i => min(Portable.uhash(i, col("hm"))).as(s"m$i"))
+      val oldSigs = postings.groupBy("doc").agg(mins.head, mins.tail: _*)
+        .as[(Long, Long, Long, Long, Long)].collect().toSet
+      val newSigs = Dedup.minHashSignatures(docs, "doc_id", "text", 3, 4, maxDf)
+        .as[(Long, Long, Long, Long, Long)].collect().toSet
+      assert(newSigs == oldSigs, s"maxDf=$maxDf")
+    }
+  }
+
   test("incremental minhash: probe finds cross-slice dups, equals full-join restriction") {
     import spark.implicits._
     val existing = Seq(
@@ -1077,17 +1153,29 @@ class PlanAuditSpec extends SparkTestBase {
   test("near-dup clustering: min-label propagation converges across hops") {
     import spark.implicits._
     // two components: a 4-node PATH 1-2-3-4 (needs multi-hop propagation)
-    // and an isolated pair 10-11
+    // and an isolated pair 10-11; then a 25-node path that maxIter = 20
+    // stops short of converging. Both cluster paths — the driver-side one
+    // (default guard) and the distributed rounds (guard 0) — must return the
+    // same labels, converged or not.
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("i", "j")
-    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val got = Dedup.nearDupClusters(pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L), got)
-    // intermediate rounds unpersist explicitly: after convergence only the
-    // edges cache and the final labels cache remain (NOT one per iteration —
-    // this path ran 4 propagation rounds)
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet.diff(cachedBefore)
-    assert(leaked.size <= 2, s"label caches leaked across rounds: $leaked")
+    val path = (1L until 25L).map(v => (v, v + 1)).toDF("i", "j")
+    for ((name, guard) <- Seq("driver" -> Dedup.LocalClusterMaxEdges, "distributed" -> 0L)) {
+      val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+      val got = Dedup.nearDupClusters(pairs, "i", "j", 20, guard)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L),
+        s"$name: $got")
+      // intermediate rounds unpersist explicitly: after convergence only the
+      // edges cache and the final labels cache remain (NOT one per iteration —
+      // this path ran 4 propagation rounds); the driver path keeps none
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet.diff(cachedBefore)
+      assert(leaked.size <= (if (guard == 0L) 2 else 0),
+        s"$name: label caches leaked across rounds: $leaked")
+      val stopped = Dedup.nearDupClusters(path, "i", "j", 20, guard)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      assert(stopped == (1L to 25L).map(v => v -> math.max(1L, v - 20L)).toMap,
+        s"$name: 20 synchronous rounds over a 25-node path: $stopped")
+    }
   }
 
   test("relational join picks broadcast for the small dimension side") {
