@@ -54,7 +54,7 @@ object Bench {
       backfillMbps: Double, appendGatePassed: Boolean,
       registryGatePassed: Boolean): String =
     s"""{"metric":"total","value":${f3(total)},"unit":"sec"""" +
-    s""","queries":${jmap(queries)},"sf":"$sfDir"""" +
+    s""","queries":${jmap(queries)},"sf":${jstr(sfTag(sfDir))}""" +
     s""","append_mbps":${f3(appendMbps)}""" +
     s""","scan_mbps":${f3(scanMbps)}""" +
     s""","export_mbps":${f3(exportMbps)}""" +
@@ -93,6 +93,21 @@ object Bench {
       "fetch_mid_range", "fetch_time_mid", "export_objects_64k",
       "backfill_objects_64k") ++ RegistryHeads ++
       Seq("cdc_chunk_div16", "cdc_chunk_div16k")
+
+  /** The headline's `sf`: the fixture directory's last path element (`sf0.1`
+    * for `/data/sf0.1`), cut so that it renders as a JSON string of at most
+    * [[SfTagMax]] chars between its quotes. The line's length then does not
+    * depend on where the fixtures live; the full path rides the detail
+    * record as `sf_dir`. */
+  private[graft] def sfTag(sfDir: String): String = {
+    val last = sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse("")
+    last.inits.find(jstr(_).length <= SfTagMax + 2).getOrElse("")
+  }
+  private[graft] val SfTagMax = 20
+
+  private val JsonWriter = new com.fasterxml.jackson.databind.ObjectMapper()
+  /** `s` as a JSON string literal. */
+  private[graft] def jstr(s: String): String = JsonWriter.writeValueAsString(s)
 
   private def jmap(m: scala.collection.Map[String, Double]): String =
     m.map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
@@ -284,7 +299,7 @@ object Bench {
       val section = entry.dropRight(1) +
         s""","history":${history.mkString("[", ",", "]")}}"""
       val body = (kept.toSeq :+ (sfDir -> section))
-        .map { case (k, v) => "\"" + k + "\":" + v }
+        .map { case (k, v) => jstr(k) + ":" + v }
         .mkString("{\"by_sf\":{", ",", "}}")
       java.nio.file.Files.write(java.nio.file.Paths.get(PriorPath),
         body.getBytes("UTF-8"))
@@ -1157,6 +1172,7 @@ object Bench {
     // rides the detail line printed FIRST and BENCH_DETAIL.json on disk.
     val detail =
       s"""{"bench_detail":1""" +
+      s""","sf_dir":${jstr(sfDir)}""" +
       s""","append_64k_commit_secs":${jlist(commitSecs.toSeq)}""" +
       s""","append_windows":${windows.map(w => jlist(w)).mkString("[", ",", "]")}""" +
       s""","registry_sentinel_baseline_raw":${f3(s0raw)}""" +

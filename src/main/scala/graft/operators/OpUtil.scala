@@ -24,8 +24,9 @@ private[graft] object OpUtil {
     * array — the ONE place the k-gram semantics live. Every other column
     * rides through (e.g. a streaming event-time column); `toks` is replaced
     * by the exploded gram `g`. Stream-safe (no [[rebalance]], whose
-    * `df.rdd` probe a streaming frame forbids), so the streaming screening
-    * fixtures share it instead of re-deriving the explode chain. */
+    * partition-count probe executes its input, which a streaming frame
+    * forbids), so the streaming screening fixtures share it instead of
+    * re-deriving the explode chain. */
   def explodedShinglesFromTokens(docs: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.functions._
     // `g` (the output gram) and `i` (the explode alias) are reserved: a
@@ -102,9 +103,13 @@ private[graft] object OpUtil {
     * partition and the whole explode+hash pipeline runs serially. When the
     * input has fewer partitions than the session's parallelism, shuffle it
     * out; at cluster scale inputs already arrive with thousands of
-    * partitions and this is a no-op. */
+    * partitions and this is a no-op. Counting an adaptive input's partitions
+    * runs its shuffle stages, so the result is re-rooted on that execution
+    * ([[GraftShims.withPartitionCount]]) and the query that follows does
+    * not run them again; a plain scan runs no job and keeps its pruning. */
   def rebalance(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
+    val (planned, n) = GraftShims.withPartitionCount(df)
+    if (n < target) planned.repartition(target) else planned
   }
 }

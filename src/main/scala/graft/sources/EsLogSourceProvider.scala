@@ -342,17 +342,36 @@ object EsLogMetaWatchSource {
     StructField("action", StringType, nullable = false)))
 }
 
+/** Offsets of a source whose offset is a MetaLog version (the two watch
+  * sources): the latest committed version, or, under
+  * `Trigger.AvailableNow`, the version pinned when the query starts, so
+  * the query delivers every version up to it and then stops. */
+abstract class MetaLogVersionSource(logDir: String) extends Source
+    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
+
+  import org.apache.spark.sql.connector.read.streaming.{ReadLimit, Offset => OffsetV2}
+
+  private var pinned: Option[Long] = None
+
+  override def prepareForTriggerAvailableNow(): Unit =
+    pinned = Some(MetaLog.latestVersion(logDir))
+
+  override def latestOffset(startOffset: OffsetV2, limit: ReadLimit): OffsetV2 =
+    getOffset.orNull
+
+  override def getOffset: Option[org.apache.spark.sql.execution.streaming.Offset] = {
+    val v = pinned.getOrElse(MetaLog.latestVersion(logDir))
+    if (v < 0) None else Some(EsLogOffset(v))
+  }
+}
+
 /** WATCH_RESOURCE (rpc.fbs:691-778): the stream's metadata log as a change
   * feed — one row per committed action, offset = log version. Revision-based
   * watch semantics fall out of the versioned log for free. */
-class EsLogMetaWatchSource(spark: SparkSession, dir: String) extends Source {
+class EsLogMetaWatchSource(spark: SparkSession, dir: String)
+    extends MetaLogVersionSource(dir) {
 
   override def schema: StructType = EsLogMetaWatchSource.schema
-
-  override def getOffset: Option[org.apache.spark.sql.execution.streaming.Offset] = {
-    val v = MetaLog.latestVersion(dir)
-    if (v < 0) None else Some(EsLogOffset(v))
-  }
 
   override def getBatch(start: Option[org.apache.spark.sql.execution.streaming.Offset],
                         end: org.apache.spark.sql.execution.streaming.Offset): DataFrame = {
@@ -645,14 +664,10 @@ object EsLogRegistryWatchSource {
   * pd/pkg/server/storage/endpoint/stream.go). Name reuse is unambiguous by
   * construction: re-creating a dropped name carries a fresh stream_id at a
   * later revision. */
-class EsLogRegistryWatchSource(spark: SparkSession, dir: String) extends Source {
+class EsLogRegistryWatchSource(spark: SparkSession, dir: String)
+    extends MetaLogVersionSource(dir) {
 
   override def schema: StructType = EsLogRegistryWatchSource.schema
-
-  override def getOffset: Option[org.apache.spark.sql.execution.streaming.Offset] = {
-    val v = MetaLog.latestVersion(dir)
-    if (v < 0) None else Some(EsLogOffset(v))
-  }
 
   override def getBatch(start: Option[org.apache.spark.sql.execution.streaming.Offset],
                         end: org.apache.spark.sql.execution.streaming.Offset): DataFrame = {

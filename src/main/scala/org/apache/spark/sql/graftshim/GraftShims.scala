@@ -32,6 +32,25 @@ object GraftShims {
       ds.queryExecution.toRdd, ds.schema, isStreaming = false)
   }
 
+  /** The frame's partition count, planning it once. Getting an adaptive
+    * plan's RDD runs its shuffle and broadcast stages, so the frame comes
+    * back re-rooted on that RDD, with the origin's statistics, partitioning
+    * and constraints: a later query reads those stages' output instead of
+    * running them again, and a small side can still broadcast. Any other
+    * plan comes back as it is, so a later projection still prunes its scan
+    * (a plain scan's RDD runs no job). */
+  def withPartitionCount(df: DataFrame): (DataFrame, Int) = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val rdd = ds.queryExecution.toRdd
+    val out = ds.queryExecution.executedPlan match {
+      case _: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        classic.Dataset.ofRows(ds.sparkSession,
+          org.apache.spark.sql.execution.LogicalRDD.fromDataset(rdd, ds, isStreaming = false))
+      case _ => df
+    }
+    (out, rdd.getNumPartitions)
+  }
+
   /** Streaming-flag any batch frame (incl. LocalRelation-backed ones) by
     * evaluating it and re-rooting the row RDD as a streaming scan. */
   def asStreamingViaRdd(df: DataFrame): DataFrame = {

@@ -301,16 +301,32 @@ class BenchGateSpec extends AnyFunSuite {
     // Render the real final line with every timed head at worst-case field
     // widths and pin the budget. AllTimedHeads is require()d in sync with
     // the suite at bench runtime, so a new head lands in this population.
+    // The fixture path must not move the budget or break the JSON: a
+    // 200-char path with quotes and backslashes in every element.
     val qs = scala.collection.immutable.ListMap(
       Bench.AllTimedHeads.map(_ -> 8888.888): _*)
-    val line = Bench.headlineFor(88888.888, qs, "/root/testdata/sf0.1",
+    val lastElem = "sf\"0.1\\" + "\"\\" * 20
+    val hostile = ("/mnt/\"fixtures\"/back\\slash/" + "d" * 200)
+      .take(200 - lastElem.length - 1) + "/" + lastElem
+    assert(hostile.length == 200)
+    def render(sfDir: String) = Bench.headlineFor(88888.888, qs, sfDir,
       appendMbps = 8888.888, scanMbps = 8888.888, exportMbps = 8888.888,
       backfillMbps = 8888.888, appendGatePassed = false,
       registryGatePassed = false) +
       s""","host_suspect":false,"rerun_of":0}""" // main's worst-case suffix
-    assert(line.length <= 1900,
-      s"headline is ${line.length} chars — would overflow the harness's " +
-        "2000-char tail capture (with sbt's trailing success line); move " +
-        "fields to the detail record instead")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    for ((sfDir, tag) <- Seq("/data/fixtures/sf0.1" -> "sf0.1",
+                             hostile -> Bench.sfTag(hostile))) {
+      val line = render(sfDir)
+      assert(line.length <= 1900,
+        s"headline is ${line.length} chars — would overflow the harness's " +
+          "2000-char tail capture (with sbt's trailing success line); move " +
+          "fields to the detail record instead")
+      val parsed = mapper.readTree(line)
+      assert(parsed.get("sf").asText() == tag, line)
+      assert(parsed.get("queries").size() == Bench.AllTimedHeads.distinct.size)
+    }
+    assert(Bench.sfTag(hostile).startsWith("sf\"0.1\\"), Bench.sfTag(hostile))
+    assert(Bench.jstr(Bench.sfTag(hostile)).length <= Bench.SfTagMax + 2)
   }
 }

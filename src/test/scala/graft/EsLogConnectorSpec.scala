@@ -329,6 +329,45 @@ class EsLogConnectorSpec extends SparkTestBase {
     assert(rows.toSeq == Seq((0L, 0L, "createStream"), (1L, 0L, "openStream"), (2L, 0L, "kvPut")))
   }
 
+  test("watch sources under Trigger.AvailableNow deliver up to the version pinned at start, then stop") {
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    import scala.jdk.CollectionConverters._
+    val dir = tmpDir("watch-now-")
+    EsLog.create(dir, streamId = 8L)          // v0 createStream
+    EsLog.open(dir, 1L)                        // v1 openStream
+    EsLog.putKV(dir, "a", "1")                 // v2 kvPut
+    // the source itself: a commit after the pin is not offered
+    val src = new graft.sources.EsLogMetaWatchSource(spark, dir)
+    src.prepareForTriggerAvailableNow()
+    EsLog.putKV(dir, "b", "2")                 // v3, after the pin
+    assert(src.latestOffset(null, ReadLimit.allAvailable()).json() == "2")
+    // a query pins v3 at start; each batch commits a new version, which
+    // an unpinned source would offer as the next batch, forever
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, String)]()
+    val q = spark.readStream.format("eslog").option("watch", "metadata").load(dir)
+      .writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        b.collect().foreach(r => seen.add((r.getLong(0), r.getLong(1), r.getString(2))))
+        EsLog.putKV(dir, "c", "3")
+        ()
+      }
+      .trigger(Trigger.AvailableNow())
+      .start()
+    assert(q.awaitTermination(120000), "the AvailableNow query must stop by itself")
+    assert(seen.asScala.toSeq.sorted == Seq((0L, 0L, "createStream"), (1L, 0L, "openStream"),
+      (2L, 0L, "kvPut"), (3L, 0L, "kvPut")))
+    assert(graft.meta.MetaLog.latestVersion(dir) == 4L, "the in-batch commit landed, undelivered")
+    // the registry watch pins the catalog log the same way
+    val cat = new graft.eslog.EsCatalog(tmpDir("watch-now-cat-"))
+    cat.createStream("alpha")
+    val reg = new graft.sources.EsLogRegistryWatchSource(spark, cat.root)
+    reg.prepareForTriggerAvailableNow()
+    val pinned = reg.latestOffset(null, ReadLimit.allAvailable()).json()
+    cat.createStream("beta")
+    assert(reg.latestOffset(null, ReadLimit.allAvailable()).json() == pinned)
+    assert(graft.meta.MetaLog.latestVersion(cat.root).toString != pinned)
+  }
+
   test("streaming dropDuplicatesWithinWatermark over the eslog source") {
     val dir = tmpDir("wmdedup-")
     EsLog.create(dir, streamId = 9L)

@@ -279,13 +279,25 @@ class IndexCommitSpec extends SparkTestBase {
     assert(dead.size == 2, s"base + slice reclaimed: $dead")
   }
 
+  /** Six edited copies of one random 600-byte payload (4 bytes bumped at a
+    * per-copy offset): the chunks they share differ between divisors 16
+    * and 32, so a probe chunking with a stale divisor answers differently. */
+  private def editedRandomPayloads(): Seq[(Long, Array[Byte])] = {
+    val base = Array.fill(600)(0.toByte)
+    new scala.util.Random(7).nextBytes(base)
+    (0L until 6L).map { i =>
+      val b = base.clone()
+      (0 until 4).foreach(j => b(i.toInt * 90 + j) = (b(i.toInt * 90 + j) + 1).toByte)
+      (i, b)
+    }
+  }
+
   test("media library rebuild with new chunk params: probes use the NEW divisor (params memo safe)") {
     import spark.implicits._
     // r18 memoizes the immutable params sidecar by path; a REBUILD commits a
     // NEW generation-unique sidecar, so probes must pick up the new divisor
     // through the pointer, never a stale memo entry
-    val docs = (0L until 6L).map(i =>
-      (i, (s"payload-$i-" + "x" * 200).getBytes("UTF-8"))).toDF("media_id", "payload")
+    val docs = editedRandomPayloads().toDF("media_id", "payload")
     val root = tmpDir("ixc-media-params-")
     Multimodal.writeMediaLibraryIndex(docs, "media_id", "payload", root,
       window = 8, divisor = 16, maxDf = 64, nBuckets = 8)
@@ -304,6 +316,7 @@ class IndexCommitSpec extends SparkTestBase {
     // with 32 (sidecar of the new generation), not a memoized 16
     Multimodal.writeMediaLibraryIndex(docs, "media_id", "payload", root,
       window = 8, divisor = 32, maxDf = 64, nBuckets = 8)
+    assert(inMemory(32) != inMemory(16), "fixture: the two divisors must probe differently")
     assert(viaIndex() === inMemory(32),
       "probe after rebuild must use the rebuilt generation's divisor")
   }
@@ -313,15 +326,7 @@ class IndexCommitSpec extends SparkTestBase {
     // a FIRST build registers the bare `params` sidecar name; deleting the
     // directory and building again writes that same name with other
     // params, so a probe in the same JVM must not serve the memoized row.
-    // Edited copies of one random payload: how many chunks they share
-    // depends on the divisor.
-    val base = Array.fill(600)(0.toByte)
-    new scala.util.Random(7).nextBytes(base)
-    val docs = (0L until 6L).map { i =>
-      val b = base.clone()
-      (0 until 4).foreach(j => b(i.toInt * 90 + j) = (b(i.toInt * 90 + j) + 1).toByte)
-      (i, b)
-    }.toDF("media_id", "payload")
+    val docs = editedRandomPayloads().toDF("media_id", "payload")
     val root = tmpDir("ixc-media-oob-")
     def build(divisor: Int): Unit = Multimodal.writeMediaLibraryIndex(docs, "media_id",
       "payload", root, window = 8, divisor = divisor, maxDf = 64, nBuckets = 8)

@@ -1545,4 +1545,67 @@ class PlanAuditSpec extends SparkTestBase {
     val readSchema = p.linesIterator.find(_.contains("ReadSchema")).getOrElse(p)
     assert(!readSchema.contains("payload"), readSchema)
   }
+
+  test("rebalance runs a shuffled input's map stages once; over a plain scan it runs no job and keeps pruning") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+    import scala.jdk.CollectionConverters._
+    import graft.operators.OpUtil
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.scheduler.StageInfo]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = { stages.add(e.stageInfo); () }
+    }
+    // (result, jobs run, stages run that scan spark.range's own RDD). A
+    // skipped stage (its shuffle output reused) is never submitted.
+    def counted[T](body: => T): (T, Int, Int) = {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.set(0); stages.clear()
+      val out = body
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      (out, jobs.get, stages.asScala.count(_.rddInfos.exists(_.name == "ParallelCollectionRDD")))
+    }
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10m")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      def grouped = spark.range(100000).groupBy((col("id") % 1000).as("k"))
+        .agg(count(lit(1)).as("n"))
+      val (plain, plainJobs, plainMaps) = counted(grouped.collect())
+      val (rows, rebJobs, rebMaps) = counted(OpUtil.rebalance(grouped).collect())
+      assert(plainMaps == 1, s"plain collect: $plainMaps range-scan stages")
+      assert(rebMaps == 1, s"rebalance + collect ran the groupBy's map stage $rebMaps times")
+      // at most the repartition's own map stage on top of the plain collect
+      assert(rebJobs <= plainJobs + 1, s"rebalance + collect: $rebJobs jobs, plain: $plainJobs")
+      def sorted(rs: Array[org.apache.spark.sql.Row]) =
+        rs.map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      assert(sorted(rows) == sorted(plain))
+
+      // a plain file scan: no job, and a later projection still prunes
+      val dir = tmpDir("rebalance-scan-")
+      spark.range(1000).select(col("id").as("a"), (col("id") * 2).as("b"),
+        col("id").cast("string").as("c")).coalesce(1).write.mode("overwrite").parquet(dir)
+      val scan = spark.read.parquet(dir)
+      val (reb, scanJobs, _) = counted(OpUtil.rebalance(scan))
+      assert(scanJobs == 0, s"rebalance over a file scan ran $scanJobs jobs")
+      val p = plan(reb.select("a"))
+      val readSchema = p.linesIterator.find(_.contains("ReadSchema")).getOrElse(p)
+      assert(readSchema.contains("struct<a:bigint>"), readSchema)
+
+      // a small shuffled side keeps its statistics: it still broadcasts
+      val small = OpUtil.rebalance(spark.range(100).groupBy((col("id") % 10).as("k"))
+        .agg(count(lit(1)).as("n")))
+      val big = spark.range(20000000L).select((col("id") % 10).as("k2"))
+      val jp = plan(big.join(small, col("k2") === col("k")))
+      assert(jp.contains("BroadcastHashJoin"), jp)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
+      }
+    }
+  }
 }
