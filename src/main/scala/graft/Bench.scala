@@ -384,8 +384,8 @@ object Bench {
     // ... and the eslog append/commit stack (offset passes, parquet writer,
     // footer-audit job, CAS log) on a throwaway stream, so the FIRST timed
     // append doesn't pay class-load + codegen for the whole write path
-    locally {
-      val wdir = java.nio.file.Files.createTempDirectory("bench-warm-").toString
+    withScratch { scratch =>
+      val wdir = scratch("bench-warm-")
       graft.eslog.EsLog.create(wdir, streamId = 98L)
       graft.eslog.EsLog.open(wdir, 1L)
       val wb = spark.range(64).select(
@@ -407,7 +407,7 @@ object Bench {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     memProbeDf.count()
 
-    val attempt0 = runSuite(spark, sfDir, priorKey, memProbeDf, force)
+    val attempt0 = withScratch(runSuite(_, spark, sfDir, priorKey, memProbeDf, force))
     val rerun = !attempt0.appendGatePassed
     val fin =
       if (!rerun) attempt0
@@ -417,7 +417,7 @@ object Bench {
         // with provenance (VERDICT r12 #1a)
         System.err.println("[bench] append gate failed on all windows — " +
           "auto re-running the full suite once")
-        runSuite(spark, sfDir, priorKey, memProbeDf, force)
+        withScratch(runSuite(_, spark, sfDir, priorKey, memProbeDf, force))
       }
 
     // CROSS-RUN HOST-HEALTH CHECK (r14 instrument gap): compare this run's
@@ -488,7 +488,27 @@ object Bench {
     spark.stop()
   }
 
-  private def runSuite(spark: SparkSession, sfDir: String,
+  private def deleteRecursively(p: String): Unit = {
+    val root = java.nio.file.Paths.get(p)
+    if (java.nio.file.Files.exists(root))
+      java.nio.file.Files.walk(root)
+        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
+  }
+
+  /** Runs `body` with a maker of temp dirs (`scratch(prefix)`), every one of
+    * which is deleted when `body` ends, failed or not: the 64 KiB stream and
+    * the backfill bucket hold gigabytes at sf0.1. */
+  private def withScratch[T](body: (String => String) => T): T = {
+    val made = scala.collection.mutable.ArrayBuffer.empty[String]
+    try body { prefix =>
+      val d = java.nio.file.Files.createTempDirectory(prefix).toString
+      made += d
+      d
+    } finally made.foreach(deleteRecursively)
+  }
+
+  private def runSuite(scratch: String => String, spark: SparkSession, sfDir: String,
                        priorKey: String, memProbeDf: DataFrame,
                        force: DataFrame => Unit): SuiteResult = {
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
@@ -585,7 +605,7 @@ object Bench {
     //    docs/benchmark.md "Approach"). Steady state, the way the reference
     //    measures its 500 MB/s: one warmup commit, then 8 timed back-to-back
     //    131 MiB commits (1.05 GiB through the full append pipeline). --
-    val dir64k = java.nio.file.Files.createTempDirectory("bench-64k-").toString
+    val dir64k = scratch("bench-64k-")
     val n64k = 2000L
     val payload64k = n64k * 36L * 1820L // repeat(uuid)=36B x 1820 = 65520 B/batch
     // 16 timed commits: host slow-phases last several seconds and can cover
@@ -672,13 +692,6 @@ object Bench {
     // reclaimed outside the timing. Median-of-5 like the others; brackets
     // the write-heavy segment within-run and persists per SF for the
     // cross-run host_suspect drift check.
-    def deleteRecursively(p: String): Unit = {
-      val root = java.nio.file.Paths.get(p)
-      if (java.nio.file.Files.exists(root))
-        java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
-    }
     def writeSentinelOnce(): Double = {
       val d = java.nio.file.Files.createTempDirectory("bench-wsent-").toString
       graft.eslog.EsLog.create(d, streamId = 97L)
@@ -716,8 +729,7 @@ object Bench {
     // bucket shape a migration reads (one blob per file through binaryFile;
     // a parquet of 8 MiB blobs would put 4096-row columnar batches of them
     // in memory at read time). 8 MiB objects -> ~260 files.
-    val bfObjDir = java.nio.file.Files
-      .createTempDirectory("graft-bench-bfobj-").toString + "/bucket"
+    val bfObjDir = scratch("graft-bench-bfobj-") + "/bucket"
     graft.eslog.EsLog.exportObjectFiles(spark, dir64k, bfObjDir,
       warmed * n64k, (warmed + nCommits) * n64k,
       maxObjectBytes = 8 * 1024 * 1024)

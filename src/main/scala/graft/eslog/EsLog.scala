@@ -5,6 +5,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.{EsLogManifestFileIndex, GraftShims, ManifestFile, OffsetBounds}
+import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types._
 
 import graft.meta._
@@ -1148,6 +1150,28 @@ object EsLog {
 
   // ---- read path ----
 
+  /** The one read of stream files: `files` of `streamDir`'s manifest as
+    * Spark's native Parquet relation over
+    * [[org.apache.spark.sql.graftshim.EsLogManifestFileIndex]], cut to
+    * `bounds` by [[org.apache.spark.sql.graftshim.EsLogRowBounds]]' exact
+    * residual wherever a file reaches past them. Every read of stream files
+    * plans this relation: fetch, the time lookups, `format("eslog")`, the
+    * streaming source, HotCache loads and compaction's input. */
+  private[graft] def filesRelation(spark: SparkSession, streamDir: String, files: Seq[FileMeta],
+                                   bounds: Option[OffsetBounds] = None,
+                                   options: Map[String, String] = Map.empty): BaseRelation =
+    EsLogManifestFileIndex.relation(spark, streamDir, files.map(manifestFile(streamDir, _)),
+      RecordBatchRow.schema, options, bounds)
+
+  /** [[filesRelation]] as a frame, its bounds already a Filter. */
+  private[graft] def readFiles(spark: SparkSession, streamDir: String, files: Seq[FileMeta],
+                               bounds: Option[OffsetBounds] = None): DataFrame =
+    GraftShims.dfFromRelation(spark, filesRelation(spark, streamDir, files, bounds))
+
+  private def manifestFile(dir: String, f: FileMeta, streamId: Long = -1L): ManifestFile =
+    ManifestFile(join(dir, f.path), f.bytes, f.startOffset, f.endOffset,
+      f.minTimestamp, f.maxTimestamp, f.maxDelta, streamId, f.rows)
+
   /** fetch [start, end): returns whole batches whose span intersects the
     * request (straddle semantics, api/Stream.java:36-44), bounded by the
     * trim offset and the committed next offset.
@@ -1319,11 +1343,10 @@ object EsLog {
     if (st.deleted) throw new IllegalStateException(s"stream $streamDir deleted")
     val cands = st.filesInRange(st.startOffset, st.nextOffset)
       .filter(_.maxTimestamp >= tsMs).sortBy(_.startOffset)
+    val readable = Some(OffsetBounds(st.startOffset, st.nextOffset))
     cands.foreach { f =>
-      val m = spark.read.schema(graft.model.RecordBatchRow.schema)
-        .parquet(join(streamDir, f.path))
-        .where(col("base_timestamp") >= tsMs &&
-          col("base_offset") + col("last_offset_delta") > st.startOffset)
+      val m = readFiles(spark, streamDir, Seq(f), readable)
+        .where(col("base_timestamp") >= tsMs)
         .agg(min("base_offset")).head()
       if (!m.isNullAt(0)) return math.max(st.startOffset, m.getLong(0))
     }
@@ -1344,16 +1367,12 @@ object EsLog {
                   fromMs: Long, untilMs: Long): DataFrame = {
     val st = MetaLog.load(streamDir)
     if (st.deleted) throw new IllegalStateException(s"stream $streamDir deleted")
-    val metas = st.filesInRange(st.startOffset, st.nextOffset)
-      .filter(f => f.maxTimestamp >= fromMs && f.minTimestamp < untilMs)
-    if (metas.isEmpty || fromMs >= untilMs)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        graft.model.RecordBatchRow.schema)
-    spark.read.schema(graft.model.RecordBatchRow.schema)
-      .parquet(metas.map(f => join(streamDir, f.path)): _*)
-      .where(col("base_timestamp") >= fromMs && col("base_timestamp") < untilMs &&
-        col("base_offset") < st.nextOffset &&
-        col("base_offset") + col("last_offset_delta") > st.startOffset)
+    val metas =
+      if (fromMs >= untilMs) Nil
+      else st.filesInRange(st.startOffset, st.nextOffset)
+        .filter(f => f.maxTimestamp >= fromMs && f.minTimestamp < untilMs)
+    readFiles(spark, streamDir, metas, Some(OffsetBounds(st.startOffset, st.nextOffset)))
+      .where(col("base_timestamp") >= fromMs && col("base_timestamp") < untilMs)
   }
 
   private def fetchState(spark: SparkSession, streamDir: String, st: StreamState,
@@ -1375,53 +1394,24 @@ object EsLog {
       }
       if (inRange.nonEmpty) hi = cap
     }
-    val metas = st.filesInRange(lo, hi)
-    if (metas.isEmpty || lo >= hi)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], RecordBatchRow.schema)
+    val metas = if (lo >= hi) Nil else st.filesInRange(lo, hi)
+    val bounds = OffsetBounds(lo, hi)
     // Byte source: the HotCache may serve some of the pruned files from
-    // executor memory (same file set, same predicate — bit-identical rows);
-    // cold files stay a plain vectorized Parquet scan. See [[HotCache]].
-    // The all-cold default rides the manifest FileIndex (same relation the
-    // connector builds): pushed offset/timestamp predicates prune FILES
-    // before planning, sizeInBytes feeds broadcast decisions from real
-    // manifest stats, and an unfiltered count(*) collapses to a metadata
-    // answer ([[org.apache.spark.sql.graftshim.EsLogMetadataOnlyCount]]).
-    val source = HotCache.split(spark, streamDir, st, metas) match {
+    // executor memory (same file set, same residual — bit-identical rows);
+    // otherwise the one manifest relation ([[readFiles]]): pushed
+    // offset/timestamp predicates prune FILES before planning, sizeInBytes
+    // feeds broadcast decisions from real manifest stats, and an unbounded
+    // count(*) collapses to a metadata answer
+    // ([[org.apache.spark.sql.graftshim.EsLogMetadataOnlyCount]]). The
+    // residual is added only where a file reaches past [lo, hi). See
+    // [[HotCache]].
+    HotCache.split(spark, streamDir, st, metas) match {
       case Some((hotDfs, cold)) =>
-        val coldDf =
-          if (cold.isEmpty) Nil
-          else Seq(spark.read.schema(RecordBatchRow.schema)
-            .parquet(cold.map(f => join(streamDir, f.path)): _*))
-        (hotDfs ++ coldDf).reduce(_ union _)
-      case None =>
-        import org.apache.spark.sql.graftshim.{EsLogManifestFileIndex, GraftShims, ManifestFile}
-        GraftShims.dfFromRelation(spark,
-          EsLogManifestFileIndex.relation(spark, streamDir,
-            metas.map(f => ManifestFile(join(streamDir, f.path), f.bytes,
-              f.startOffset, f.endOffset, f.minTimestamp, f.maxTimestamp,
-              rows = f.rows)),
-            RecordBatchRow.schema, Map.empty))
+        val coldDf = if (cold.isEmpty) Nil else Seq(readFiles(spark, streamDir, cold))
+        GraftShims.withinBounds((hotDfs ++ coldDf).reduce(_ union _),
+          metas.map(manifestFile(streamDir, _)), bounds)
+      case None => readFiles(spark, streamDir, metas, Some(bounds))
     }
-    // Residual bounds, applied only when they can exclude anything — a
-    // vacuous predicate costs a Filter node that blocks the metadata-only
-    // count and widens every downstream plan for nothing:
-    //  - lower (straddle) residual iff some selected file starts below lo.
-    //    Written pushdown-friendly: the exact `base_offset +
-    //    last_offset_delta > lo` is two-column arithmetic no Parquet
-    //    row-group stat can serve, so prune with the single-column
-    //    relaxation `base_offset > lo - maxDelta` and keep the exact form
-    //    as a cheap residual;
-    //  - upper residual iff some selected file ends above hi.
-    val needLower = metas.exists(_.startOffset < lo)
-    val needUpper = metas.exists(_.endOffset > hi)
-    var out = source
-    if (needLower) {
-      val maxDelta = metas.map(_.maxDelta.toLong).max
-      out = out.where(col("base_offset") > lo - maxDelta &&
-        col("base_offset") + col("last_offset_delta") > lo)
-    }
-    if (needUpper) out = out.where(col("base_offset") < hi)
-    out
   }
 
   /** Full committed scan (snapshot-isolated: bound to nextOffset at plan time). */
@@ -1448,12 +1438,9 @@ object EsLog {
   private[graft] def scanStates(spark: SparkSession,
                                 rootDir: String,
                                 streams: Seq[(String, StreamState)]): DataFrame = {
-    import org.apache.spark.sql.graftshim.{EsLogManifestFileIndex, GraftShims, ManifestFile}
     val live = streams.filterNot(_._2.deleted)
     val manifest = live.flatMap { case (dir, st) =>
-      st.filesInRange(st.startOffset, st.nextOffset).map(f =>
-        ManifestFile(join(dir, f.path), f.bytes, f.startOffset, f.endOffset,
-          f.minTimestamp, f.maxTimestamp, st.streamId, rows = f.rows))
+      st.filesInRange(st.startOffset, st.nextOffset).map(manifestFile(dir, _, st.streamId))
     }
     if (manifest.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], RecordBatchRow.schema)
@@ -1487,12 +1474,9 @@ object EsLog {
     * batch-aligned `base_offset >= lo`. */
   private[graft] def scanStatesSlices(spark: SparkSession, rootDir: String,
       slices: Seq[(String, StreamState, Long, Long, Boolean)]): DataFrame = {
-    import org.apache.spark.sql.graftshim.{EsLogManifestFileIndex, GraftShims, ManifestFile}
     val live = slices.filter { case (_, st, lo, hi, _) => !st.deleted && lo < hi }
     val manifest = live.flatMap { case (dir, st, lo, hi, _) =>
-      st.filesInRange(lo, hi).map(f =>
-        ManifestFile(join(dir, f.path), f.bytes, f.startOffset, f.endOffset,
-          f.minTimestamp, f.maxTimestamp, st.streamId))
+      st.filesInRange(lo, hi).map(manifestFile(dir, _, st.streamId))
     }
     if (manifest.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], RecordBatchRow.schema)
@@ -1556,14 +1540,13 @@ object EsLog {
       val totalBytes = seg.files.map(_.bytes).sum
       val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
       if (nOut < seg.files.size) {
-        val paths = seg.files.map(f => join(streamDir, f.path))
         // Stats pass + write pass share ONE Tungsten plan, same recipe as
         // append: the range shuffle executes once and is reused; rows are
         // written unchanged (offsets are stable across compaction), so no
         // per-row mapping at all.
         val sortCols = if (clusterBy.nonEmpty) clusterBy else Seq(col("base_offset"))
-        val internal = org.apache.spark.sql.graftshim.GraftShims.internalRdd(
-          spark.read.schema(RecordBatchRow.schema).parquet(paths: _*)
+        val internal = GraftShims.internalRdd(
+          readFiles(spark, streamDir, seg.files)
             .repartitionByRange(nOut, col("base_offset"))
             .sortWithinPartitions(sortCols: _*))
         val stats = internal.mapPartitionsWithIndex { (pid, it) =>

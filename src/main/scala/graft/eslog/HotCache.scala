@@ -8,7 +8,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 import graft.meta.{FileMeta, MetaLog, StreamState}
-import graft.model.RecordBatchRow
 
 /** HotCache — the tail-read cache (SURVEY §2.4; reference
   * `components/replication/src/stream/cache.rs:10-94`).
@@ -134,8 +133,7 @@ object HotCache {
       val abs = MetaLog.join(streamDir, m.path)
       val c = entries.computeIfAbsent(abs, { _ =>
         Cached(streamDir, m,
-          spark.read.schema(RecordBatchRow.schema).parquet(abs)
-            .persist(StorageLevel.MEMORY_ONLY),
+          EsLog.readFiles(spark, streamDir, Seq(m)).persist(StorageLevel.MEMORY_ONLY),
           new AtomicLong(now))
       })
       c.lastUsed.set(now)

@@ -1,10 +1,9 @@
 package graft.sources
 
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.streaming.{Sink, Source}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.OffsetBounds
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
@@ -40,42 +39,35 @@ class EsLogSourceProvider extends DataSourceRegister
 
   // ---- batch ----
 
-  /** Batch read. Two physical strategies with identical results:
+  /** Batch read: the manifest snapshot as Spark's NATIVE parquet relation
+    * via a manifest-driven FileIndex (the Delta technique) — vectorized
+    * reader, whole-stage codegen, columns pruned and filters pushed into
+    * parquet, manifest stats feeding `sizeInBytes` for broadcast decisions.
+    * No Row conversion anywhere.
     *
-    *  - FAST PATH (default): the manifest snapshot as Spark's NATIVE parquet
-    *    relation via a manifest-driven FileIndex (the Delta technique) —
-    *    vectorized reader, whole-stage codegen, columns pruned and filters
-    *    pushed into parquet, manifest stats feeding `sizeInBytes` for
-    *    broadcast decisions. No Row conversion anywhere.
-    *  - EXACT PATH: the V1 PrunedFilteredScan, only when row-level bounds
-    *    the file-granular index can't express are required — an explicit
-    *    startOffset/endOffset fetch range, or a stream trimmed mid-file
-    *    (sub-startOffset batches still live inside a straddling file).
+    * Row-level bounds the file-granular index can't express — an explicit
+    * `startOffset`/`endOffset` fetch range (straddle semantics,
+    * api/Stream.java:36-44), or a stream trimmed mid-file (sub-startOffset
+    * batches still live inside a straddling file) — ride on the index, and
+    * the optimizer rule [[org.apache.spark.sql.graftshim.EsLogRowBounds]]
+    * puts fetch's exact residual above the same scan.
     */
   override def createRelation(sqlContext: SQLContext,
                               parameters: Map[String, String]): BaseRelation = {
     val dir = path(parameters)
-    val explicitRange = parameters.contains("startOffset") || parameters.contains("endOffset")
     // time travel: .option("asOfVersion", v) pins the manifest snapshot
     val st = parameters.get("asOfVersion") match {
       case Some(v) => MetaLog.loadAt(dir, v.toLong)
       case None    => MetaLog.load(dir)
     }
     if (st.deleted) throw new IllegalStateException(s"stream $dir deleted")
-    val midFileTrim = st.allFiles.exists(f =>
-      f.startOffset < st.startOffset && f.endOffset > st.startOffset)
-    if (explicitRange || midFileTrim)
-      new EsLogRelation(sqlContext, dir, parameters)
-    else {
-      val files = st.allFiles.map { f =>
-        org.apache.spark.sql.graftshim.ManifestFile(
-          graft.meta.MetaLog.join(dir, f.path), f.bytes,
-          f.startOffset, f.endOffset, f.minTimestamp, f.maxTimestamp,
-          rows = f.rows)
-      }
-      org.apache.spark.sql.graftshim.EsLogManifestFileIndex.relation(
-        sqlContext.sparkSession, dir, files, RecordBatchRow.schema, parameters)
-    }
+    val lo = math.max(parameters.get("startOffset").map(_.toLong).getOrElse(st.startOffset),
+      st.startOffset)
+    val hi = math.min(parameters.get("endOffset").map(_.toLong).getOrElse(st.nextOffset),
+      st.nextOffset)
+    EsLog.filesRelation(sqlContext.sparkSession, dir,
+      if (lo >= hi) Nil else st.filesInRange(lo, hi),
+      Some(OffsetBounds(lo, hi)), parameters)
   }
 
   override def createRelation(sqlContext: SQLContext, mode: SaveMode,
@@ -128,65 +120,6 @@ class EsLogSourceProvider extends DataSourceRegister
   override def createSink(sqlContext: SQLContext, parameters: Map[String, String],
                           partitionColumns: Seq[String], outputMode: OutputMode): Sink =
     new EsLogStreamSink(sqlContext.sparkSession, path(parameters), parameters)
-}
-
-/** Batch relation: schema-stable scan whose file set is pruned through the
-  * segment manifest using pushed offset/timestamp filters. Spark re-applies
-  * every filter exactly after the scan, so pruning only needs to be a
-  * superset (straddling batches included, like the reference's fetch). */
-class EsLogRelation(override val sqlContext: SQLContext, dir: String,
-                    parameters: Map[String, String])
-    extends BaseRelation with PrunedFilteredScan {
-
-  override def schema: StructType = RecordBatchRow.schema
-
-  override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
-    val spark = sqlContext.sparkSession
-    val st = parameters.get("asOfVersion") match {
-      case Some(v) => MetaLog.loadAt(dir, v.toLong)
-      case None    => MetaLog.load(dir)
-    }
-    if (st.deleted) throw new IllegalStateException(s"stream $dir deleted")
-
-    // Explicit fetch-range options use reference straddle semantics
-    // (api/Stream.java:36-44); pushed filters prune exactly-matching rows
-    // (Spark re-evaluates the predicates post-scan).
-    var lo = parameters.get("startOffset").map(_.toLong).getOrElse(st.startOffset)
-    var hi = parameters.get("endOffset").map(_.toLong).getOrElse(st.nextOffset)
-    var tsLo = Long.MinValue
-    var tsHi = Long.MaxValue
-    filters.foreach {
-      case GreaterThanOrEqual("base_offset", v: Long) => lo = math.max(lo, v)
-      case GreaterThan("base_offset", v: Long)        => lo = math.max(lo, v + 1)
-      case LessThan("base_offset", v: Long)           => hi = math.min(hi, v)
-      case LessThanOrEqual("base_offset", v: Long)    => hi = math.min(hi, v + 1)
-      case EqualTo("base_offset", v: Long)            => lo = math.max(lo, v); hi = math.min(hi, v + 1)
-      case GreaterThanOrEqual("base_timestamp", v: Long) => tsLo = math.max(tsLo, v)
-      case GreaterThan("base_timestamp", v: Long)        => tsLo = math.max(tsLo, v + 1)
-      case LessThan("base_timestamp", v: Long)           => tsHi = math.min(tsHi, v)
-      case LessThanOrEqual("base_timestamp", v: Long)    => tsHi = math.min(tsHi, v + 1)
-      case EqualTo("base_timestamp", v: Long)            => tsLo = math.max(tsLo, v); tsHi = math.min(tsHi, v + 1)
-      case _ => () // non-prunable: Spark applies it post-scan
-    }
-    lo = math.max(lo, st.startOffset)
-    hi = math.min(hi, st.nextOffset)
-    val metas = st.filesInRange(lo, hi)
-      .filter(f => f.maxTimestamp >= tsLo && f.minTimestamp < tsHi)
-    val cols = if (requiredColumns.isEmpty) Array("base_offset") else requiredColumns
-    val base =
-      if (metas.isEmpty || lo >= hi)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      else {
-        val maxDelta = metas.map(_.maxDelta.toLong).max
-        spark.read.schema(schema)
-          .parquet(metas.map(f => graft.meta.MetaLog.join(dir, f.path)): _*)
-          .where(col("base_offset") > lo - maxDelta && col("base_offset") < hi &&
-            col("base_offset") + col("last_offset_delta") > lo)
-      }
-    val projected = base.select(cols.map(col).toIndexedSeq: _*)
-    val result = projected.rdd
-    if (requiredColumns.isEmpty) result.map(_ => Row()) else result
-  }
 }
 
 /** V1 streaming offset: "all records with base_offset < n are available". */
@@ -310,24 +243,14 @@ class EsLogStreamSource(spark: SparkSession, dir: String,
     lastEnd = math.max(lastEnd, hi)
     val st = MetaLog.load(dir)
     val effLo = math.max(lo, st.startOffset)
-    val metas = st.filesInRange(effLo, hi)
-    if (metas.isEmpty || effLo >= hi)
-      return org.apache.spark.sql.graftshim.GraftShims.emptyStreamingDF(spark, schema)
-    val raw = spark.read.schema(schema)
-      .parquet(metas.map(f => graft.meta.MetaLog.join(dir, f.path)): _*)
-    // First micro-batch of a fresh checkpoint: use fetch's straddle lower
-    // bound so a multi-offset batch trimmed mid-span is still delivered (its
+    // First micro-batch of a fresh checkpoint: fetch's straddle lower bound,
+    // so a multi-offset batch trimmed mid-span is still delivered (its
     // readable records start at effLo but its base_offset sits below it).
     // Later micro-batches partition strictly on base_offset — the straddling
     // batch was already delivered by whichever trigger contained its base.
-    val df =
-      if (start.isEmpty) {
-        val maxDelta = metas.map(_.maxDelta.toLong).max
-        raw.where(col("base_offset") > effLo - maxDelta && col("base_offset") < hi &&
-          col("base_offset") + col("last_offset_delta") > effLo)
-      } else {
-        raw.where(col("base_offset") >= effLo && col("base_offset") < hi)
-      }
+    val df = EsLog.readFiles(spark, dir,
+      if (effLo >= hi) Nil else st.filesInRange(effLo, hi),
+      Some(OffsetBounds(effLo, hi, straddle = start.isEmpty)))
     org.apache.spark.sql.graftshim.GraftShims.asStreamingDF(df)
   }
 

@@ -5,20 +5,31 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.{LongType, StructType}
 
 /** A manifest entry the index prunes on: absolute path + the stats the
-  * metadata log committed with the file. `streamId` = the owning stream for
-  * multi-stream (catalog) scans; -1 = unknown/single-stream (never pruned
-  * on). */
+  * metadata log committed with the file. `maxDelta` = the widest batch in
+  * the file (what a straddle bound relaxes by). `streamId` = the owning
+  * stream for multi-stream (catalog) scans; -1 = unknown/single-stream
+  * (never pruned on). */
 final case class ManifestFile(absPath: String, bytes: Long,
                               startOffset: Long, endOffset: Long,
                               minTimestamp: Long, maxTimestamp: Long,
+                              maxDelta: Int,
                               streamId: Long = -1L,
                               rows: Long = -1L) // -1 = unknown (blocks metadata-only count)
+
+/** Exact row bounds of a single-stream read: the batches with
+  * `base_offset < hi` whose span reaches past `lo` — fetch's straddle
+  * semantics (api/Stream.java:36-44) — or, with `straddle = false`, the
+  * batches with `lo <= base_offset < hi` (a later micro-batch's strict
+  * partition of the offset axis). */
+final case class OffsetBounds(lo: Long, hi: Long, straddle: Boolean = true)
 
 /** Manifest-driven [[FileIndex]]: the stream's committed file set (a metadata
   * snapshot taken at plan time) exposed to Spark's NATIVE parquet relation —
@@ -29,9 +40,21 @@ final case class ManifestFile(absPath: String, bytes: Long,
   * (the reference's range routing, replication_stream.rs:393-421).
   *
   * Pruning is conservative (supersets): Spark re-applies every data filter
-  * exactly after the scan. */
-class EsLogManifestFileIndex(val streamDir: String, files: Seq[ManifestFile])
+  * exactly after the scan.
+  *
+  * `requested` row bounds are kept only when some row of `files` can fall
+  * outside them. A relation over a bounded index never reaches the scan:
+  * [[EsLogRowBounds]] rewrites it into `Filter(exact residual, relation
+  * over [[withoutBounds]])`. */
+class EsLogManifestFileIndex(val streamDir: String, val files: Seq[ManifestFile],
+                             requested: Option[OffsetBounds] = None)
     extends FileIndex {
+
+  val bounds: Option[OffsetBounds] = requested.filter(b =>
+    files.exists(f => f.startOffset < b.lo || f.endOffset > b.hi))
+
+  /** The same file set with no row bounds: the relation under the residual. */
+  def withoutBounds: EsLogManifestFileIndex = new EsLogManifestFileIndex(streamDir, files)
 
   override def rootPaths: Seq[Path] = Seq(new Path(streamDir))
   override def partitionSchema: StructType = StructType(Nil)
@@ -40,15 +63,16 @@ class EsLogManifestFileIndex(val streamDir: String, files: Seq[ManifestFile])
   override def refresh(): Unit = ()
 
   /** Exact aggregate stats of the manifest snapshot, when every entry
-    * carries a row count — serves `count(*)` / `min(base_offset)` /
-    * `min/max(base_timestamp)` from metadata alone (see
-    * [[EsLogMetadataOnlyCount]]). The relation builders only construct this
-    * index for streams whose every committed row is readable (mid-file-trim
-    * streams fall back to the exact row-bounded V1 relation; multi-stream
-    * scans put straddle residuals in a Filter ABOVE the relation, which
-    * blocks the rewrite), so the manifest stats ARE the scan's. */
+    * carries a row count and no row bound cuts the files — serves
+    * `count(*)` / `min(base_offset)` / `min/max(base_timestamp)` from
+    * metadata alone (see [[EsLogMetadataOnlyCount]]). A bounded index
+    * reports none, because its bounds drop rows the file stats count;
+    * multi-stream scans put straddle residuals in a Filter ABOVE the
+    * relation, which blocks the rewrite. So the manifest stats ARE the
+    * scan's. */
   def manifestStats: Option[EsLogManifestStats] =
-    if (files.isEmpty) Some(EsLogManifestStats(0L, 0L, 0L, 0L, empty = true))
+    if (bounds.nonEmpty) None
+    else if (files.isEmpty) Some(EsLogManifestStats(0L, 0L, 0L, 0L, empty = true))
     else if (files.forall(_.rows >= 0))
       Some(EsLogManifestStats(files.map(_.rows).sum, files.map(_.startOffset).min,
         files.map(_.minTimestamp).min, files.map(_.maxTimestamp).max, empty = false))
@@ -56,6 +80,9 @@ class EsLogManifestFileIndex(val streamDir: String, files: Seq[ManifestFile])
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    if (bounds.nonEmpty) throw new IllegalStateException(
+      s"row-bounded eslog relation over $streamDir reached the scan unfiltered: " +
+        "EsLogRowBounds is not among the optimizer rules of the session running it")
     var lo = Long.MinValue; var hi = Long.MaxValue      // base_offset ∈ [lo, hi)
     var tsLo = Long.MinValue; var tsHi = Long.MaxValue  // base_timestamp ∈ [tsLo, tsHi)
     var sidLo = Long.MinValue; var sidHi = Long.MaxValue // stream_id ∈ [sidLo, sidHi)
@@ -127,17 +154,72 @@ private class EsLogReadOnlyParquet extends ParquetFileFormat {
 
 object EsLogManifestFileIndex {
   /** The stream as Spark's native parquet relation over the manifest
-    * snapshot: vectorized scan + codegen, no Row conversion (the fix for the
-    * V1 PrunedFilteredScan conversion tax). `sizeInBytes` comes from the
-    * manifest, so broadcast decisions see real sizes. */
+    * snapshot: vectorized scan + codegen, no Row conversion. `sizeInBytes`
+    * comes from the manifest, so broadcast decisions see real sizes. When
+    * `bounds` cut the files, [[EsLogRowBounds]] is registered on `spark`,
+    * whose optimizer then puts the exact residual above the relation. */
   def relation(spark: org.apache.spark.sql.SparkSession, streamDir: String,
                files: Seq[ManifestFile], schema: StructType,
-               options: Map[String, String]): BaseRelation =
+               options: Map[String, String],
+               bounds: Option[OffsetBounds] = None): BaseRelation = {
+    val index = new EsLogManifestFileIndex(streamDir, files, bounds)
+    if (index.bounds.nonEmpty) EsLogRowBounds.register(spark)
     HadoopFsRelation(
-      new EsLogManifestFileIndex(streamDir, files),
+      index,
       partitionSchema = StructType(Nil),
       dataSchema = schema,
       bucketSpec = None,
       fileFormat = new EsLogReadOnlyParquet,
       options = options)(spark.asInstanceOf[classic.SparkSession])
+  }
+}
+
+/** Rewrites a manifest relation whose index carries row bounds into
+  * `Filter(exact residual, the relation without bounds)`. A `BaseRelation`
+  * cannot carry a row filter, so this is how `format("eslog")` with
+  * `startOffset`/`endOffset`, or over a stream trimmed mid-file, plans one
+  * native Parquet scan. Idempotent: its output holds no bounded index.
+  *
+  * The residual is fetch's: `base_offset < hi`, and for the lower bound
+  * either the exact straddle `base_offset + last_offset_delta > lo` with
+  * its Parquet-pushable relaxation `base_offset > lo - maxDelta`, or the
+  * strict `base_offset >= lo`. Each bound is added only when some file
+  * reaches past it, so a bound that excludes no row costs no Filter. */
+object EsLogRowBounds extends Rule[LogicalPlan] {
+
+  override def apply(plan: LogicalPlan): LogicalPlan = plan transformUp {
+    case l: LogicalRelation => l.relation match {
+      case fs @ HadoopFsRelation(idx: EsLogManifestFileIndex, _, _, _, _, _) if idx.bounds.nonEmpty =>
+        within(l.copy(relation = fs.copy(location = idx.withoutBounds)(fs.sparkSession)),
+          idx.files, idx.bounds.get)
+      case _ => l
+    }
+  }
+
+  /** `child`, which reads `files`, cut to the rows inside `b`. */
+  def within(child: LogicalPlan, files: Seq[ManifestFile], b: OffsetBounds): LogicalPlan = {
+    def attr(name: String): Attribute = child.output.find(_.name == name).getOrElse(
+      throw new IllegalStateException(s"no $name column to bound in ${child.output}"))
+    val off = attr("base_offset")
+    val lower =
+      if (!files.exists(_.startOffset < b.lo)) None
+      else if (!b.straddle) Some(GreaterThanOrEqual(off, Literal(b.lo)))
+      else Some(And(
+        GreaterThan(off, Literal(b.lo - files.map(_.maxDelta.toLong).max)),
+        GreaterThan(Add(off, Cast(attr("last_offset_delta"), LongType)), Literal(b.lo))))
+    val upper =
+      if (files.exists(_.endOffset > b.hi)) Some(LessThan(off, Literal(b.hi))) else None
+    (lower ++ upper).reduceOption(And).fold(child)(Filter(_, child))
+  }
+
+  /** Adds the rule to `spark`'s optimizer once, through the session's own
+    * `experimental.extraOptimizations`, so a session built without
+    * [[graft.sql.GraftSqlExtensions]] plans bounded relations too. */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val exp = spark.experimental
+    exp.synchronized {
+      if (!exp.extraOptimizations.contains(this))
+        exp.extraOptimizations = exp.extraOptimizations :+ this
+    }
+  }
 }

@@ -10,8 +10,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 /** Aggregate statistics a manifest snapshot can answer without touching
   * data. All exact: row counts and per-file timestamp min/max come from the
   * append's stats pass over actual rows (footer-audited at commit); the
-  * minimum base_offset is the lowest file's start (the manifest relation is
-  * only built when no file is mid-trimmed, so its first row IS that
+  * minimum base_offset is the lowest file's start (an index whose files
+  * reach past its row bounds reports no stats, so its first row IS that
   * offset). The maximum base_offset is NOT derivable (endOffset − last
   * delta is not stored), so `max(base_offset)` never rewrites. */
 final case class EsLogManifestStats(rows: Long, minOff: Long,
@@ -35,9 +35,11 @@ final case class EsLogManifestStats(rows: Long, minOff: Long,
   *    Projects only — any Filter/Join/Limit in between blocks the rewrite
   *    (which is what makes the straddle-trim residual of multi-stream
   *    scans safe automatically);
-  *  - every manifest entry carries a row count ([[ManifestFile.rows]] >= 0;
-  *    mid-file-trimmed streams never build this relation at all — they
-  *    fall back to the exact row-bounded V1 relation).
+  *  - the relation is a batch one (a streaming micro-batch's aggregate is
+  *    stateful);
+  *  - every manifest entry carries a row count ([[ManifestFile.rows]] >= 0)
+  *    and the index carries no row bounds (an explicit fetch range or a
+  *    mid-file trim: [[EsLogManifestFileIndex.manifestStats]] is None).
   *
   * Registered through [[graft.sql.GraftSqlExtensions]] as a post-hoc
   * optimizer rule.
@@ -55,7 +57,9 @@ object EsLogMetadataOnlyCount extends Rule[LogicalPlan] {
   private def statsOf(plan: LogicalPlan)
       : Option[(EsLogManifestStats, Seq[Attribute])] = plan match {
     case Project(_, child) => statsOf(child)
-    case l: LogicalRelation =>
+    // a micro-batch's aggregate is stateful: it folds into the query's
+    // running state, so a metadata answer would replace, not add to, it
+    case l: LogicalRelation if !l.isStreaming =>
       l.relation match {
         case fs: HadoopFsRelation =>
           fs.location match {

@@ -59,20 +59,24 @@ object GraftShims {
       ds.queryExecution.toRdd, ds.schema, isStreaming = true)
   }
 
-  /** Empty streaming-flagged frame (a micro-batch with no new data). */
-  def emptyStreamingDF(spark: SparkSession, schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val cs = spark.asInstanceOf[classic.SparkSession]
-    cs.internalCreateDataFrame(
-      cs.sparkContext.emptyRDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema, isStreaming = true)
-  }
-
   /** A BaseRelation as a DataFrame — for relations constructed directly
-    * (e.g. the multi-stream manifest index) rather than through DataSource
-    * format resolution. */
+    * (the manifest relations) rather than through DataSource format
+    * resolution. Row bounds on a manifest relation become their residual
+    * Filter here, at analysis ([[EsLogRowBounds]]), so the frame plans the
+    * same in any session that runs it — a streaming query's own clone
+    * included. */
   def dfFromRelation(spark: SparkSession,
                      rel: org.apache.spark.sql.sources.BaseRelation): DataFrame =
-    spark.asInstanceOf[classic.SparkSession].baseRelationToDataFrame(rel)
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      EsLogRowBounds(LogicalRelation(rel)))
+
+  /** `df`, a union of scans of `files`, cut to the rows inside `bounds` by
+    * the residual [[EsLogRowBounds]] puts over a bounded manifest relation. */
+  def withinBounds(df: DataFrame, files: Seq[ManifestFile], bounds: OffsetBounds): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    classic.Dataset.ofRows(ds.sparkSession,
+      EsLogRowBounds.within(ds.queryExecution.analyzed, files, bounds))
+  }
 
   /** The frame's physical output as an InternalRow RDD (Tungsten format, no
     * Row conversion). Two jobs run over the SAME returned RDD share every

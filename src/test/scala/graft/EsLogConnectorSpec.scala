@@ -1,9 +1,17 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, RDDScanExec, RowDataSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.{EsLogManifestFileIndex, EsLogRowBounds}
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.eslog.EsLog
+import graft.eslog.{EsLog, HotCache}
+import graft.meta.MetaLog
 
 /** format("eslog") connector: batch read (pushdown pruning), batch write,
   * streaming source (rate-limited micro-batches), streaming sink
@@ -21,6 +29,72 @@ class EsLogConnectorSpec extends SparkTestBase {
     EsLog.append(spark, dir, in, 1L, sortKey = Some("id"), numPartitions = 4)
     dir
   }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  private def manifestScans(p: SparkPlan): Seq[FileSourceScanExec] =
+    Plans.collectWithSubqueries(p) {
+      case s: FileSourceScanExec if s.relation.location.isInstanceOf[EsLogManifestFileIndex] => s
+    }
+
+  /** The read ran as one native scan over the manifest index — or, over
+    * no file at all, as the empty local relation the optimizer makes of
+    * it — with no Row-RDD relation anywhere in its executed plan. */
+  private def assertOnePath(df: DataFrame): Unit = assertOnePath(df.queryExecution.executedPlan)
+
+  private def assertOnePath(p: SparkPlan): Unit = {
+    val noFile = Plans.collectWithSubqueries(p) {
+      case l: LocalTableScanExec if l.rows.isEmpty => l
+    }
+    assert(manifestScans(p).nonEmpty || noFile.nonEmpty, p.toString)
+    assert(Plans.collectWithSubqueries(p) {
+      case r: RowDataSourceScanExec => r
+      case r: RDDScanExec => r
+    }.isEmpty, p.toString)
+  }
+
+  private def boundedIndexes(p: LogicalPlan): Seq[EsLogManifestFileIndex] = p.collect {
+    case l: LogicalRelation => l.relation match {
+      case fs: HadoopFsRelation => fs.location match {
+        case idx: EsLogManifestFileIndex if idx.bounds.nonEmpty => Seq(idx)
+        case _ => Nil
+      }
+      case _ => Nil
+    }
+  }.flatten
+
+  private type Batch = (Long, Int, Long, String)
+
+  private def batches(df: DataFrame): Seq[Batch] =
+    df.select(col("base_offset"), col("last_offset_delta"), col("base_timestamp"),
+      col("payload").cast("string")).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getString(3))).toSeq.sorted
+
+  /** 240 batches whose `last_offset_delta` cycles 1..4 (offsets [0, 600),
+    * ts = 10 × id) in 4 files, trimmed at offset 7 inside the batch
+    * covering [6, 10); `v0` is the version before a second commit of 40
+    * batches (offsets [600, 700)) in 2 files. Also returns every committed
+    * batch, trimmed ones included, read without bounds. */
+  private def mkMultiOffsetStream(): (String, Long, Seq[Batch]) = {
+    val dir = tmpDir("onepath-")
+    EsLog.create(dir, streamId = 21L)
+    EsLog.open(dir, 1L)
+    def input(from: Long, n: Long) = spark.range(from, from + n).select(
+      col("id"), col("id").cast("string").cast("binary").as("payload"),
+      (col("id") % 4 + 1).as("last_offset_delta"), (col("id") * 10).as("base_timestamp"))
+    EsLog.append(spark, dir, input(0, 240), 1L, sortKey = Some("id"), numPartitions = 4)
+    EsLog.trim(dir, 7L)
+    val v0 = MetaLog.load(dir).version
+    EsLog.append(spark, dir, input(240, 40), 1L, sortKey = Some("id"), numPartitions = 2)
+    val st = MetaLog.load(dir)
+    assert(st.startOffset == 7L && st.nextOffset == 700L && st.allFiles.size == 6)
+    (dir, v0, batches(EsLog.readFiles(spark, dir, st.allFiles)))
+  }
+
+  /** The reference straddle model: batches with `base_offset < hi` reaching
+    * past `lo`, none of them ending at or below the trim offset 7. */
+  private def straddling(all: Seq[Batch], lo: Long, hi: Long): Seq[Batch] =
+    all.filter { case (o, d, _, _) => o < hi && o + d > math.max(lo, 7L) }
 
   test("batch read through format(eslog) matches EsLog.scan") {
     val dir = mkStream(500)
@@ -87,7 +161,7 @@ class EsLogConnectorSpec extends SparkTestBase {
     assert(EsLog.scan(spark, dir).count() == 0)
   }
 
-  test("mid-file trim falls back to the exact row-bounded relation") {
+  test("mid-file trim reads through the bounded manifest scan") {
     val dir = tmpDir("trimfb-")
     EsLog.create(dir, streamId = 12L)
     EsLog.open(dir, 1L)
@@ -101,6 +175,130 @@ class EsLogConnectorSpec extends SparkTestBase {
       .select("base_offset").collect().map(_.getLong(0)).sorted
     assert(viaFormat.sameElements(direct))
     assert(viaFormat.head == 30L && viaFormat.length == 70)
+    assertOnePath(spark.read.format("eslog").load(dir))
+  }
+
+  test("every read API plans one manifest scan, rows = fetch's") {
+    val (dir, v0, all) = mkMultiOffsetStream()
+    val files = MetaLog.load(dir).allFiles.sortBy(_.startOffset)
+    val mid = files(1)
+    // straddling batches at lo, file edges, ranges across an edge, empty,
+    // inverted and past-the-head ranges
+    val ranges = Seq((0L, 700L), (8L, 45L), (2L, 9L), (mid.startOffset + 1, mid.endOffset + 3),
+      (mid.startOffset, mid.endOffset), (files(2).endOffset - 2, files(3).startOffset + 2),
+      (50L, 50L), (300L, 200L), (650L, 10000L), (10000L, 20000L))
+    def range(lo: Long, hi: Long) = spark.read.format("eslog")
+      .option("startOffset", lo.toString).option("endOffset", hi.toString)
+    ranges.foreach { case (lo, hi) =>
+      val expect = straddling(all, lo, hi)
+      val fetched = EsLog.fetch(spark, dir, lo, hi)
+      assert(batches(fetched) == expect, s"fetch [$lo, $hi)")
+      val viaFormat = range(lo, hi).load(dir)
+      assert(batches(viaFormat) == expect, s"format(eslog) [$lo, $hi)")
+      assertOnePath(viaFormat)
+      assertOnePath(fetched)
+      // time travel: the snapshot before the second commit ends at 600
+      val asOf = range(lo, hi).option("asOfVersion", v0.toString).load(dir)
+      assert(batches(asOf) == straddling(all, lo, math.min(hi, 600L)), s"asOfVersion [$lo, $hi)")
+      assert(batches(asOf) == batches(EsLog.fetchAt(spark, dir, v0, lo, hi)))
+      assertOnePath(asOf)
+    }
+    // the mid-file-trimmed stream read whole: the trim is the only bound
+    val whole = spark.read.format("eslog").load(dir)
+    assert(batches(whole) == straddling(all, 0L, 700L))
+    assert(batches(whole) == batches(EsLog.fetch(spark, dir)))
+    assertOnePath(whole)
+    // fetchByTime (ts = 10 × id): the window [20, 40) holds the batch at
+    // offset 3 (trimmed whole) and the one at 6 (straddles the trim)
+    Seq((0L, 100000L), (20L, 40L), (35L, 95L), (2395L, 5000L), (40L, 40L)).foreach { case (from, until) =>
+      val byTime = EsLog.fetchByTime(spark, dir, from, until)
+      assert(batches(byTime) == straddling(all, 0L, 700L).filter(b => b._3 >= from && b._3 < until),
+        s"fetchByTime [$from, $until)")
+      assertOnePath(byTime)
+    }
+    // the timestamp index resolves through the same bounded read
+    assert(EsLog.offsetForTimestamp(spark, dir, 25L) == 7L)
+    assert(EsLog.offsetForTimestamp(spark, dir, 41L) == 11L)
+    assert(EsLog.offsetForTimestamp(spark, dir, 1000000L) == 700L)
+  }
+
+  test("bounded relation: count scans exactly; rule idempotent") {
+    val (dir, _, all) = mkMultiOffsetStream()
+    val df = spark.read.format("eslog")
+      .option("startOffset", "8").option("endOffset", "45").load(dir)
+    val counted = df.groupBy().count()
+    assert(counted.collect().head.getLong(0) == straddling(all, 8L, 45L).size)
+    assertOnePath(counted)
+    assert(df.count() == straddling(all, 8L, 45L).size)
+    // the rule replaces the bounded index by a Filter over the unbounded
+    // relation, once: its own output is a fixed point
+    val analyzed = df.queryExecution.analyzed
+    assert(boundedIndexes(analyzed).size == 1)
+    val once = EsLogRowBounds(analyzed)
+    assert(boundedIndexes(once).isEmpty && once.collectFirst { case f: Filter => f }.nonEmpty, once)
+    assert(EsLogRowBounds(once).fastEquals(once))
+    assert(boundedIndexes(df.queryExecution.optimizedPlan).isEmpty)
+    // a range on file edges excludes no row: no bound, no Filter, and the
+    // count is the manifest's again
+    val f = MetaLog.load(dir).allFiles.sortBy(_.startOffset).apply(2)
+    val edges = spark.read.format("eslog").option("startOffset", f.startOffset.toString)
+      .option("endOffset", f.endOffset.toString).load(dir)
+    assert(boundedIndexes(edges.queryExecution.analyzed).isEmpty)
+    val edgeCount = edges.groupBy().count()
+    assert(edgeCount.collect().head.getLong(0) == f.rows)
+    assert(manifestScans(edgeCount.queryExecution.executedPlan).isEmpty)
+    // a session that never loaded the extensions' rules gets the rule
+    // registered by the provider that builds its bounded relation
+    val fresh = spark.newSession()
+    assert(!fresh.experimental.extraOptimizations.contains(EsLogRowBounds))
+    val viaFresh = fresh.read.format("eslog")
+      .option("startOffset", "8").option("endOffset", "45").load(dir)
+    assert(batches(viaFresh) == straddling(all, 8L, 45L))
+    assert(fresh.experimental.extraOptimizations.count(_ == EsLogRowBounds) == 1)
+    fresh.read.format("eslog").option("startOffset", "9").load(dir).count()
+    assert(fresh.experimental.extraOptimizations.count(_ == EsLogRowBounds) == 1)
+  }
+
+  test("streaming micro-batches plan the manifest scan exactly") {
+    val (dir, _, all) = mkMultiOffsetStream()
+    val ckpt = tmpDir("ckpt-onepath-")
+    // 37 offsets per trigger: trigger bounds fall inside multi-offset
+    // batches, which the strict later micro-batches must deliver once
+    val q = spark.readStream.format("eslog").option("maxOffsetsPerTrigger", "37")
+      .load(dir)
+      .writeStream.format("memory").queryName("onepath_drain")
+      .outputMode("append").option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination(120000)
+    assert(q.recentProgress.count(_.numInputRows > 0) >= 10)
+    assert(batches(spark.table("onepath_drain")) == straddling(all, 0L, 700L))
+    val last = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution
+    assertOnePath(last.executedPlan)
+  }
+
+  test("HotCache-split fetch: cold rest on the manifest scan") {
+    val (dir, _, all) = mkMultiOffsetStream()
+    val tail = MetaLog.load(dir).allFiles.sortBy(_.startOffset).takeRight(2)
+    try {
+      HotCache.clear()
+      spark.conf.set(HotCache.GLOBAL_BYTES, (64L * 1024 * 1024).toString)
+      spark.conf.set(HotCache.STREAM_BYTES, tail.map(_.bytes).sum.toString)
+      Seq((8L, 700L), (2L, 650L), (620L, 700L)).foreach { case (lo, hi) =>
+        val df = EsLog.fetch(spark, dir, lo, hi)
+        assert(batches(df) == straddling(all, lo, hi), s"hot fetch [$lo, $hi)")
+        val p = df.queryExecution.executedPlan
+        assert(Plans.collectWithSubqueries(p) { case m: InMemoryTableScanExec => m }.nonEmpty,
+          p.toString)
+        if (lo < tail.head.startOffset) assertOnePath(p)
+      }
+      assert(HotCache.resident.keySet == tail.map(f => MetaLog.join(dir, f.path)).toSet)
+    } finally {
+      spark.conf.unset(HotCache.GLOBAL_BYTES)
+      spark.conf.unset(HotCache.STREAM_BYTES)
+      HotCache.clear()
+    }
   }
 
   test("filter pushdown prunes through the manifest (offset + timestamp)") {
@@ -200,10 +398,12 @@ class EsLogConnectorSpec extends SparkTestBase {
       .agg(countDistinct(col("base_offset")))
     assert(planOf(d).contains("FileScan"), planOf(d))
     assert(d.collect().head.getLong(0) == 1000L)
-    // mid-file trim: V1 fallback relation, rewrite does not apply, count exact
+    // mid-file trim: the index carries the trim as a row bound, so it has
+    // no metadata answer; the bounded scan counts exactly
     EsLog.trim(dir, 30L)
     val t = spark.read.format("eslog").load(dir).groupBy().count()
     assert(t.collect().head.getLong(0) == 970L)
+    assert(planOf(t).contains("FileScan"), planOf(t))
     // boundary trim: manifest path again, metadata answer reflects the trim
     EsLog.trim(dir, 250L) // file boundary (4 files x 250)
     val b = spark.read.format("eslog").load(dir).groupBy().count()
