@@ -334,7 +334,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = HarnessSession(32)
+    val cpus = spark.sparkContext.defaultParallelism.toString
     // Envelope sections key by CORE COUNT as well as SF (r18): the driver
     // re-benches the same SF at a lower core count, and at fixture scale
     // many heads run FASTER with fewer cores (sub-scale inversion — task
@@ -343,26 +344,6 @@ object Bench {
     // falsely flagged against, and vice versa for the genuinely parallel
     // heads. cpus=32 keeps the bare-SF key so committed history stays live.
     val priorKey = if (cpus == "32") sfDir else s"$sfDir#c$cpus"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Record-batch payloads compress 10-20x, and Spark bins leaf splits
-      // by COMPRESSED bytes — default 128 MiB bins decompress to multi-GB
-      // CPU tasks, and a split count equal to the core count leaves zero
-      // slack for stragglers (one GC pause or steal burst extends the whole
-      // stage). 16 MiB bins ≈ 3-4 tasks per core on payload scans: measured
-      // 0.7-0.9 s vs 2.3-9.0 s (unstable) for the same 2.6 GB hash at
-      // default binning. Same setting a real deployment makes; documented
-      // in the README's deployment notes.
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      // driver heap comes from the launching JVM (build.sbt javaOptions /
-      // SPARK_DRIVER_MEM) — setting spark.driver.memory here would be a no-op
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     def force(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()

@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
 /** Quick per-query timer for optimization work: same session shape as the
   * bench, warm pass + median/min of N timed noop-forced runs per named
   * registry query. Not the instrument of record (Bench is — gates,
@@ -14,17 +11,7 @@ object QTime {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession(32)
     def force(name: String): Unit = {
       spark.sparkContext.setJobDescription(s"qtime: $name")
       SparkEntry.queries(name)(spark, sfDir)

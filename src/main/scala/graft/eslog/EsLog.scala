@@ -3,7 +3,9 @@ package graft.eslog
 import java.util.UUID
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.{EsLogManifestFileIndex, GraftShims, ManifestFile, OffsetBounds}
 import org.apache.spark.sql.sources.BaseRelation
@@ -207,20 +209,25 @@ object EsLog {
 
     val streamId = if (st.streamId >= 0) st.streamId else DefaultStreamId
     var batches = normalize(input, streamId)
+    // never write into fewer tasks than the measured-optimal fraction of
+    // cores (see the comment on `internal`), nor more than `cur`
+    def floorAt(cur: Int): Int =
+      math.min(cur, math.max(2, spark.sparkContext.defaultParallelism / 4))
     sortKey match {
       case Some(k) =>
         // an explicit sort shuffles anyway, so the size-targeted count is
-        // free to apply directly when the caller didn't pin numPartitions
-        // (same parallelism floor as the unsorted branch: never sort into
-        // fewer write tasks than the measured-optimal fraction of cores)
+        // free to apply directly when the caller didn't pin numPartitions.
+        // The input's partitions are counted from its own execution (with
+        // the sort key still among its columns): on an adaptive plan that
+        // runs its shuffle stages, and the range-partitioned write below
+        // reads their output instead of running them again.
         val n =
           if (numPartitions > 0) numPartitions
           else {
-            val cur = batches.rdd.getNumPartitions
-            val floor = math.min(cur, math.max(2, spark.sparkContext.defaultParallelism / 4))
-            sizeTargetedCount(batches, targetFileBytes)
-              .map(m => math.max(m, floor))
-              .getOrElse(cur)
+            val target = sizeTargetedCount(batches, targetFileBytes)
+            val (rooted, cur) = GraftShims.withPartitionCount(input)
+            batches = normalize(rooted, streamId)
+            target.map(m => math.max(m, floorAt(cur))).getOrElse(cur)
           }
         batches = batches.repartitionByRange(n, col(k)).sortWithinPartitions(col(k))
           .select(batches.columns.map(col).toSeq: _*)
@@ -273,8 +280,7 @@ object EsLog {
         sizeTargetedCount(batches, targetFileBytes) match {
           case Some(n) =>
             val cur = internal0.getNumPartitions
-            val floor = math.min(cur, math.max(2, spark.sparkContext.defaultParallelism / 4))
-            val floored = math.max(n, floor)
+            val floored = math.max(n, floorAt(cur))
             if (floored * 2 <= cur) (batches, internal0.coalesce(floored))
             else if (floored >= cur * 2) {
               val split = batches.repartition(floored)
@@ -797,27 +803,28 @@ object EsLog {
     *    incremental imports (today bucket A, tomorrow its continuation)
     *    remain legal.
     *
-    * Scale shape: one boundary-aligned shuffle. Rows classify to segments
-    * executor-side against the broadcast boundary table (metadata-scale),
-    * partition cut points align to segment attach points plus size-targeted
-    * internal splits, and the two post-shuffle passes (stats, write) reuse
-    * one shuffle exactly like [[append]]'s prefix-sum idiom. Contiguity is
-    * validated in-pass (executor) and across partitions (driver) BEFORE any
-    * file is written; the manifest commit is one CAS carrying one
-    * [[graft.meta.BackfillFiles]] action per touched segment.
+    * Scale shape: one boundary-aligned shuffle of the heavy rows. Planning
+    * and validation decide with small rows and the heavy bytes move once
+    * (optimization guide §8): the cut-planning pass, the per-partition stats
+    * pass and ALL contiguity validation run over metadata-sized light rows
+    * `(base_offset, last_offset_delta, base_timestamp)`. Rows classify to
+    * segments executor-side against the broadcast boundary table
+    * (metadata-scale); partition cut points align to segment attach points
+    * plus size-targeted internal splits; contiguity is validated in-pass
+    * (executor) and across partitions (driver) BEFORE any file is written.
+    * The heavy input is then shuffled through the same partitioner and its
+    * shuffle output read exactly once, by the write; the manifest commit is
+    * one CAS carrying one [[graft.meta.BackfillFiles]] action per touched
+    * segment.
     *
-    * `statsInput` (r17, optimization guide §8 — decide with small rows,
-    * move heavy bytes once): a caller that can derive `(base_offset,
-    * last_offset_delta, base_timestamp)` per input row WITHOUT
-    * materializing payloads (e.g. [[backfillObjects]]' frame-header walk)
-    * supplies it here, and the cut-planning pass, the per-partition stats
-    * pass and ALL contiguity validation run over those metadata-sized rows
-    * — the heavy input is then decoded exactly once (the shuffle map) and
-    * its shuffle output read exactly once (the write). Safety is unchanged:
-    * [[CommitTasks.auditedMetas]] compares every written file's row
-    * count and offset span against the light-derived stats, so a light/heavy
-    * divergence aborts the commit before the CAS. Without `statsInput` the
-    * original two-pass-over-one-shuffle flow runs unchanged.
+    * `statsInput` supplies the light rows: a caller that can derive them
+    * WITHOUT materializing payloads (e.g. [[backfillObjects]]' frame-header
+    * walk) passes them here. `None` projects the same three columns from
+    * `input`, which then evaluates twice: once for the persisted light rows,
+    * once for the shuffle map. Either way [[CommitTasks.auditedMetas]]
+    * compares every written file's row count and offset span against the
+    * light-derived stats, so a light/heavy divergence aborts the commit
+    * before the CAS.
     *
     * @return number of record batches backfilled (0 = everything already
     *         present). */
@@ -852,86 +859,57 @@ object EsLog {
     val fileCountEst = sizeTargetedCount(batches, targetFileBytes)
 
     val offIdx = 2; val deltaIdx = 3; val tsIdx = 4
-    val sc = spark.sparkContext
-    val spansB = sc.broadcast(spans)
-    // classify + drop covered/pre-trim rows; key by embedded offset
-    val kept = org.apache.spark.sql.graftshim.GraftShims.internalRdd(batches)
-      .mapPartitions { it =>
+    val spansB = spark.sparkContext.broadcast(spans)
+    // the position in `spans` of the segment holding `off`; -1 below the
+    // trim point (the first segment's start)
+    def segAt(starts: Array[Long], off: Long): Int = {
+      val i = java.util.Arrays.binarySearch(starts, off)
+      if (i >= 0) i else -i - 2
+    }
+    // classify by the embedded offset at column `off`: key the rows still
+    // to backfill by it, drop pre-trim leftovers and a segment's backfilled
+    // prefix, fail loudly beyond the last imported boundary
+    def classified[T](rows: RDD[InternalRow], off: Int)(value: InternalRow => T): RDD[(Long, T)] =
+      rows.mapPartitions { it =>
         val sp = spansB.value
-        val startsL = sp.map(_._2)
+        val starts = sp.map(_._2)
         it.flatMap { r =>
-          val off = r.getLong(offIdx)
-          var i = java.util.Arrays.binarySearch(startsL, off)
-          if (i < 0) i = -i - 2
+          val o = r.getLong(off)
+          val i = segAt(starts, o)
           if (i < 0) None // below the trim point: the source dropped these
           else {
             val (idx, _, e0, attach) = sp(i)
-            if (off >= e0)
+            if (o >= e0)
               throw new OutOfOrderException(
-                s"record at offset $off beyond the last imported boundary $e0 " +
+                s"record at offset $o beyond the last imported boundary $e0 " +
                   s"(segment $idx) — data the metadata snapshot never declared")
-            else if (off < attach) None // already backfilled: idempotent re-run
-            else Some((off, r.copy()))
+            else if (o < attach) None // already backfilled: idempotent re-run
+            else Some((o, value(r)))
           }
         }
       }
 
-    // METADATA-ONLY twin of `kept` when the caller supplied a light
-    // projection: same classification (drop pre-trim/covered, fail loudly
-    // beyond the last boundary), rows are (off, (delta, ts)) — planning and
-    // validation never touch payloads
-    val lightKept: Option[org.apache.spark.rdd.RDD[(Long, (Int, Long))]] =
-      statsInput.map { sdf =>
-        val light = sdf.select(
-          col("base_offset").cast(LongType),
-          col("last_offset_delta").cast(IntegerType),
-          col("base_timestamp").cast(LongType))
-        org.apache.spark.sql.graftshim.GraftShims.internalRdd(light)
-          .mapPartitions { it =>
-            val sp = spansB.value
-            val startsL = sp.map(_._2)
-            it.flatMap { r =>
-              val off = r.getLong(0)
-              var i = java.util.Arrays.binarySearch(startsL, off)
-              if (i < 0) i = -i - 2
-              if (i < 0) None // below the trim point: the source dropped these
-              else {
-                val (idx, _, e0, attach) = sp(i)
-                if (off >= e0)
-                  throw new OutOfOrderException(
-                    s"record at offset $off beyond the last imported boundary $e0 " +
-                      s"(segment $idx) — data the metadata snapshot never declared")
-                else if (off < attach) None // already backfilled: idempotent re-run
-                else Some((off, (r.getInt(1), r.getLong(2))))
-              }
-            }
-          }
-          // materialized ONCE: two light jobs consume it (cut planning, the
-          // stats shuffle) and the statsInput's lineage usually re-reads the
-          // heavy source bytes (the bucket) — without the persist the light
-          // path would ADD a source read instead of removing one. Rows are
-          // ~24 B per record batch (never payloads), spill-safe, unpersisted
-          // before the heavy write below.
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
+    // The light rows (off, (delta, ts)) every planning and validation step
+    // runs over: the caller's `statsInput`, else the same columns projected
+    // from the input. Materialized ONCE: two light jobs consume them (cut
+    // planning, the stats shuffle) and their lineage usually re-reads the
+    // heavy source bytes — without the persist each would decode the source
+    // again. Rows are ~24 B per record batch (never payloads), spill-safe,
+    // unpersisted before the heavy write below.
+    val light = statsInput.getOrElse(batches).select(
+      col("base_offset").cast(LongType),
+      col("last_offset_delta").cast(IntegerType),
+      col("base_timestamp").cast(LongType))
+    val lightKept = classified(GraftShims.internalRdd(light), 0)(r => (r.getInt(1), r.getLong(2)))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // pass 0: per-segment (count, minOff, maxEndOff) for split planning —
-    // bounded output: partitions × segments. Over the light rows when
-    // supplied (no payload decode), else over the heavy classified rows.
-    val segAgg = (lightKept match {
-      case Some(lk) => lk.map { case (off, dt) => (off, dt._1) }
-      case None     => kept.map { case (off, r) => (off, r.getInt(deltaIdx)) }
-    }).mapPartitions { it =>
-      val sp = spansB.value
-      val startsL = sp.map(_._2)
-      def segAt(off: Long): Int = {
-        var i = java.util.Arrays.binarySearch(startsL, off)
-        if (i < 0) i = -i - 2
-        i
-      }
+    // bounded output: partitions × segments
+    val segAgg = lightKept.mapPartitions { it =>
+      val starts = spansB.value.map(_._2)
       val m = scala.collection.mutable.Map.empty[Int, (Long, Long, Long)]
-      it.foreach { case (off, d) =>
-        val si = segAt(off)
+      it.foreach { case (off, (d, _)) =>
+        val si = segAt(starts, off)
         val end = off + d
         val cur = m.getOrElse(si, (0L, Long.MaxValue, Long.MinValue))
         m(si) = (cur._1 + 1, math.min(cur._2, off), math.max(cur._3, end))
@@ -941,7 +919,7 @@ object EsLog {
       .groupBy(_._1).map { case (si, parts) =>
         si -> ((parts.map(_._2._1).sum, parts.map(_._2._2).min, parts.map(_._2._3).max))
       }
-    if (segAgg.isEmpty) { lightKept.foreach(_.unpersist(false)); return 0L }
+    if (segAgg.isEmpty) { lightKept.unpersist(false); return 0L }
     val totalCnt = segAgg.values.map(_._1).sum
 
     // cut points: each segment's attach point, plus offset-uniform internal
@@ -960,51 +938,31 @@ object EsLog {
     }
     val cutArr = cuts.result().distinct.sorted
     val partitioner = new OffsetCutPartitioner(cutArr)
-    val shuffled = kept.repartitionAndSortWithinPartitions(partitioner)
 
     // pass 1 (stats + in-partition contiguity): one bounded row per
-    // partition, over (off, (delta, ts)) rows — shared by both flows
-    val statsFn = (pid: Int, it: Iterator[(Long, (Int, Long))]) => {
-      val sp = spansB.value
-      val startsL = sp.map(_._2)
-      def segAt(off: Long): Int = {
-        var i = java.util.Arrays.binarySearch(startsL, off)
-        if (i < 0) i = -i - 2
-        i
-      }
-      var n = 0L; var minOff = -1L; var expect = -1L; var segIdx = -1
-      var minTs = Long.MaxValue; var maxTs = Long.MinValue; var maxD = 0
-      it.foreach { case (off, dt) =>
-        if (n == 0L) { minOff = off; segIdx = segAt(off) }
-        else if (off != expect)
-          throw new OutOfOrderException(
-            s"gap inside backfill partition $pid: expected offset $expect, got $off")
-        val d = dt._1
-        expect = off + d; n += 1
-        if (d > maxD) maxD = d
-        val ts = dt._2
-        if (ts < minTs) minTs = ts
-        if (ts > maxTs) maxTs = ts
-      }
-      if (n == 0L) Iterator.empty[(Int, Int, Long, Long, Long, Long, Long, Int)]
-      else Iterator.single((pid, segIdx, n, minOff, expect, minTs, maxTs, maxD))
-    }
-    // light flow: stats + validation ride a metadata-sized shuffle through
-    // the SAME partitioner (identical partition membership by construction);
-    // the heavy shuffle is then consumed exactly once, by the write pass.
-    // Heavy flow (no statsInput): stats read the heavy shuffle output, which
-    // the write pass reuses — the original two-passes-over-one-shuffle idiom.
-    val partStats = (lightKept match {
-      case Some(lk) =>
-        lk.repartitionAndSortWithinPartitions(partitioner)
-          .mapPartitionsWithIndex((pid, it) => statsFn(pid, it))
-      case None =>
-        shuffled.mapPartitionsWithIndex { (pid, it) =>
-          statsFn(pid, it.map { case (off, r) =>
-            (off, (r.getInt(deltaIdx), r.getLong(tsIdx))) })
+    // partition, from a metadata-sized shuffle of the light rows through
+    // the SAME partitioner as the heavy one below (identical partition
+    // membership by construction), so the heavy shuffle is read once, by
+    // the write pass
+    val partStats = lightKept.repartitionAndSortWithinPartitions(partitioner)
+      .mapPartitionsWithIndex { (pid, it) =>
+        val starts = spansB.value.map(_._2)
+        var n = 0L; var minOff = -1L; var expect = -1L; var segIdx = -1
+        var minTs = Long.MaxValue; var maxTs = Long.MinValue; var maxD = 0
+        it.foreach { case (off, (d, ts)) =>
+          if (n == 0L) { minOff = off; segIdx = segAt(starts, off) }
+          else if (off != expect)
+            throw new OutOfOrderException(
+              s"gap inside backfill partition $pid: expected offset $expect, got $off")
+          expect = off + d; n += 1
+          if (d > maxD) maxD = d
+          if (ts < minTs) minTs = ts
+          if (ts > maxTs) maxTs = ts
         }
-    }).collect().sortBy(_._4)
-    lightKept.foreach(_.unpersist(false))
+        if (n == 0L) Iterator.empty
+        else Iterator.single((pid, segIdx, n, minOff, expect, minTs, maxTs, maxD))
+      }.collect().sortBy(_._4)
+    lightKept.unpersist(false)
 
     // driver validation BEFORE any file is written: per segment the
     // partition chain must attach exactly at the segment's confirmed end,
@@ -1046,28 +1004,25 @@ object EsLog {
             "supply the whole bucket, or import in prefix order")
     }
 
-    // pass 2 (write): same shuffle output, one parquet file per partition
+    // pass 2 (write): the heavy rows' one shuffle, read once, one parquet
+    // file per partition
     val outRel = s"backfill/${UUID.randomUUID().toString.take(8)}"
+    val shuffled = classified(GraftShims.internalRdd(batches), offIdx)(_.copy())
+      .repartitionAndSortWithinPartitions(partitioner)
     val assigned = shuffled.mapPartitions { it =>
       val sp = spansB.value
-      val startsL = sp.map(_._2)
-      def segAt(off: Long): Int = {
-        var i = java.util.Arrays.binarySearch(startsL, off)
-        if (i < 0) i = -i - 2
-        i
-      }
+      val starts = sp.map(_._2)
       it.map { case (off, r) =>
         val values = new Array[Any](8)
         values(0) = if (r.isNullAt(0)) null else r.getLong(0)
-        values(1) = sp(segAt(off))._1
+        values(1) = sp(segAt(starts, off))._1
         values(2) = if (r.isNullAt(1)) null else r.getShort(1)
         values(3) = off
         values(4) = r.getInt(deltaIdx)
         values(5) = if (r.isNullAt(tsIdx)) null else r.getLong(tsIdx)
         values(6) = if (r.isNullAt(5)) null else r.getMap(5)
         values(7) = if (r.isNullAt(6)) null else r.getBinary(6)
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(values)
-          : org.apache.spark.sql.catalyst.InternalRow
+        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(values): InternalRow
       }
     }
     val files = CommitTasks.writeAudited(spark, assigned, streamDir, outRel, CommitTasks.BlockBytes,

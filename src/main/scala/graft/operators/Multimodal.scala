@@ -504,7 +504,7 @@ object Multimodal {
     * bucket are fixed by the layout), so planning does ZERO tree listing or
     * footer inference — before r18 every probe ran
     * [[IndexCommit.inferAcross]] over the live trees (a driver-side
-    * metadata pass per probe, §6; ProbeProf billed the snapshot+infer
+    * metadata pass per probe, §6; r18's per-stage profile billed the snapshot+infer
     * stage ~0.3 s of the 1.5 s head at sf0.1, and at corpus scale the
     * listing grows with the tree count). Pre-id_name sidecars (legacy
     * indexes) keep the inference fallback. */
@@ -608,7 +608,7 @@ object Multimodal {
     // NOT shared()-cached (r18): the chunk set is micro-batch-bounded by
     // contract (the guard below), so re-chunking it once for the guard agg
     // and once for the broadcast build costs less than the cache's
-    // copy+persist+read machinery did (ProbeProf: ~0.2 s of a 1.4 s head),
+    // copy+persist+read machinery did (r18 profile: ~0.2 s of a 1.4 s head),
     // and leaves no executor-storage block behind per probe call.
     val inc = cdcChunkRows(incoming, idCol, payloadCol, window, divisor)
       .select(col(idCol).as("incoming"), col("ch"))

@@ -239,6 +239,33 @@ class PdSnapshotSpec extends SparkTestBase {
     assert(MetaLog.load(dst).nextOffset == 200L)
   }
 
+  test("backfill: heavy rows that disagree with statsInput abort at the commit audit, leaving nothing") {
+    val cat = new EsCatalog(tmpDir("pd-cat-audit-"))
+    cat.ingestPdSnapshot(spark, dumpDf(
+      PdSnapshot.renderStream(PdStream(21L, 1, 1, -1L), Seq(
+        PdRange(21L, 1L, 0, 0L, 10L, Seq.empty)))))
+    val dst = cat.streamDir("pd-21")
+    val before = MetaLog.load(dst)
+    // the light rows list offsets 0..9 once: every light check passes; the
+    // heavy rows repeat offset 5
+    val light = spark.range(10).select(col("id").as("base_offset"),
+      lit(1).as("last_offset_delta"), (col("id") * 100).as("base_timestamp"))
+    val heavy = spark.range(10).union(spark.range(5, 6)).select(col("id").as("base_offset"),
+      col("id").cast("string").cast("binary").as("payload"),
+      (col("id") * 100).as("base_timestamp"))
+    val e = intercept[Exception](EsLog.backfill(spark, dst, heavy, 2L, statsInput = Some(light)))
+    assert(!e.isInstanceOf[graft.meta.OutOfOrderException], s"got: $e")
+    assert(e.isInstanceOf[IllegalStateException] && e.getMessage.contains("commit aborted"),
+      s"got: $e")
+    assert(MetaLog.load(dst) == before)
+    val left = java.nio.file.Paths.get(dst, "backfill")
+    if (java.nio.file.Files.exists(left)) {
+      val files = java.nio.file.Files.walk(left)
+      try assert(!files.anyMatch(p => java.nio.file.Files.isRegularFile(p)), s"files left under $left")
+      finally files.close()
+    }
+  }
+
   test("ingestPdSnapshot: an undecodable value fails its own row; resume after a metadata-only stream") {
     val cat = new EsCatalog(tmpDir("pd-cat-dec-"))
     val good = PdSnapshot.renderStream(PdStream(8L, 1, 1, -1L), Seq(

@@ -1546,18 +1546,17 @@ class PlanAuditSpec extends SparkTestBase {
     assert(!readSchema.contains("payload"), readSchema)
   }
 
-  test("rebalance runs a shuffled input's map stages once; over a plain scan it runs no job and keeps pruning") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+  /** Counts, per `counted` call, the jobs run and the stages run that scan
+    * `spark.range`'s own RDD. A skipped stage (its shuffle output reused)
+    * is never submitted. */
+  private final class StageCounts extends org.apache.spark.scheduler.SparkListener {
+    import org.apache.spark.scheduler.{SparkListenerJobStart, SparkListenerStageSubmitted, StageInfo}
     import scala.jdk.CollectionConverters._
-    import graft.operators.OpUtil
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.scheduler.StageInfo]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = { stages.add(e.stageInfo); () }
-    }
-    // (result, jobs run, stages run that scan spark.range's own RDD). A
-    // skipped stage (its shuffle output reused) is never submitted.
+    private val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    private val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+    override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = { stages.add(e.stageInfo); () }
+    /** (result, jobs run, stages run that scan spark.range's own RDD) */
     def counted[T](body: => T): (T, Int, Int) = {
       org.apache.spark.ListenerBusDrain(spark.sparkContext)
       jobs.set(0); stages.clear()
@@ -1565,12 +1564,31 @@ class PlanAuditSpec extends SparkTestBase {
       org.apache.spark.ListenerBusDrain(spark.sparkContext)
       (out, jobs.get, stages.asScala.count(_.rddInfos.exists(_.name == "ParallelCollectionRDD")))
     }
+  }
+
+  /** Runs `f` with adaptive execution on, a 10m broadcast threshold and a
+    * registered [[StageCounts]]. */
+  private def withStageCounts[A](f: StageCounts => A): A = {
+    val counts = new StageCounts
     val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
     val saved = keys.map(k => k -> spark.conf.getOption(k))
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10m")
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    spark.sparkContext.addSparkListener(counts)
+    try f(counts)
+    finally {
+      spark.sparkContext.removeSparkListener(counts)
+      saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
+      }
+    }
+  }
+
+  test("rebalance runs a shuffled input's map stages once; over a plain scan it runs no job and keeps pruning") {
+    import graft.operators.OpUtil
+    withStageCounts { counts =>
+      import counts.counted
       def grouped = spark.range(100000).groupBy((col("id") % 1000).as("k"))
         .agg(count(lit(1)).as("n"))
       val (plain, plainJobs, plainMaps) = counted(grouped.collect())
@@ -1600,12 +1618,26 @@ class PlanAuditSpec extends SparkTestBase {
       val big = spark.range(20000000L).select((col("id") % 10).as("k2"))
       val jp = plan(big.join(small, col("k2") === col("k")))
       assert(jp.contains("BroadcastHashJoin"), jp)
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
+    }
+  }
+
+  test("a sorted append runs a shuffled input's map stage once; rows and offsets as before") {
+    import graft.eslog.EsLog
+    withStageCounts { counts =>
+      val dir = tmpDir("sorted-append-")
+      EsLog.create(dir)
+      EsLog.open(dir, 1L)
+      // 1000 groups, appended in key order: offset k carries key k
+      val grouped = spark.range(200000).groupBy((col("id") % 1000).as("k"))
+        .agg(count(lit(1)).as("n"))
+        .select(col("k"), col("k").cast("string").cast("binary").as("payload"))
+      val (range, _, maps) = counts.counted(EsLog.append(spark, dir, grouped, 1L, sortKey = Some("k")))
+      assert(maps == 1, s"sorted append ran the groupBy's map stage $maps times")
+      assert(range == ((0L, 1000L)))
+      val back = EsLog.scan(spark, dir)
+        .select(col("base_offset"), col("payload").cast("string").cast("long").as("k"))
+      assert(back.count() == 1000L)
+      assert(back.where(col("base_offset") =!= col("k")).count() == 0)
     }
   }
 }
