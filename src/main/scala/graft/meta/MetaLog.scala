@@ -226,13 +226,7 @@ object MetaLog {
     // read/parse (truncated by an interrupted copy — exactly the scenario
     // the gap backstop exists for) must not discard the successfully-read
     // pointer, or the backstop goes blind precisely when it is needed
-    val ptrSeen: Option[Long] =
-      try {
-        val s = storeFor(streamDir)
-        val ptr = join(logDir(streamDir), LastCheckpointName)
-        if (!s.exists(ptr)) None
-        else Some(new String(s.read(ptr), StandardCharsets.UTF_8).trim.toLong)
-      } catch { case scala.util.control.NonFatal(_) => None }
+    val ptrSeen = lastCheckpointPointer(streamDir)
     val state = ptrSeen.flatMap { v =>
       try {
         val s = storeFor(streamDir)
@@ -243,6 +237,16 @@ object MetaLog {
     }
     (state, ptrSeen)
   }
+
+  /** Best-effort read of the `_last_checkpoint` pointer: a version that is
+    * committed, since the pointer is written after its version file. */
+  private def lastCheckpointPointer(streamDir: String): Option[Long] =
+    try {
+      val s = storeFor(streamDir)
+      val ptr = join(logDir(streamDir), LastCheckpointName)
+      if (!s.exists(ptr)) None
+      else Some(new String(s.read(ptr), StandardCharsets.UTF_8).trim.toLong)
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Write `<v>.checkpoint.json` + `_last_checkpoint`. Content is a pure
     * function of the log prefix, so concurrent writers racing here converge
@@ -382,9 +386,17 @@ object MetaLog {
   def actionsSince(streamDir: String, after: Long): Seq[(Long, Seq[Action])] =
     listVersionsAfter(streamDir, after).map(v => v -> readVersion(streamDir, v))
 
-  /** Newest committed version (-1 when the log is empty). */
-  def latestVersion(streamDir: String): Long =
-    listVersionsAfter(streamDir, -1L).lastOption.getOrElse(-1L)
+  /** Newest committed version (-1 when the log is empty). Probes forward
+    * from the checkpoint pointer, as [[load]] does, instead of listing the
+    * log: a watch source asks on every trigger, and the listing grows with
+    * every commit while the probe is at most CheckpointInterval existence
+    * checks. */
+  def latestVersion(streamDir: String): Long = {
+    val s = storeFor(streamDir)
+    var v = lastCheckpointPointer(streamDir).getOrElse(-1L)
+    while (s.exists(versionFile(streamDir, v + 1))) v += 1
+    v
+  }
 
   /** CAS-append `actions` as version `expectedVersion + 1`.
     * Returns the new state; throws [[ConcurrentCommitException]] if another

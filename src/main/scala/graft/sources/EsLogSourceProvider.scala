@@ -3,7 +3,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.streaming.{Sink, Source}
-import org.apache.spark.sql.graftshim.OffsetBounds
+import org.apache.spark.sql.graftshim.{EsLogScanStrategy, OffsetBounds}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
@@ -91,13 +91,18 @@ class EsLogSourceProvider extends DataSourceRegister
   private def watchMode(parameters: Map[String, String]): Option[String] =
     parameters.get("watch").map(_.toLowerCase)
 
+  /** Also registers [[org.apache.spark.sql.graftshim.EsLogScanStrategy]]
+    * on the reading session: a query plans its micro-batches in a clone of
+    * the session taken at `start()`, after this and before any batch. */
   override def sourceSchema(sqlContext: SQLContext, schema: Option[StructType],
                             providerName: String,
                             parameters: Map[String, String]): (String, StructType) =
     (shortName(), watchMode(parameters) match {
       case Some("metadata") => EsLogMetaWatchSource.schema
       case Some("registry") => EsLogRegistryWatchSource.schema
-      case _                => RecordBatchRow.schema
+      case _ =>
+        EsLogScanStrategy.register(sqlContext.sparkSession)
+        RecordBatchRow.schema
     })
 
   override def createSource(sqlContext: SQLContext, metadataPath: String,

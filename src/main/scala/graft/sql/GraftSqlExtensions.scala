@@ -1512,10 +1512,8 @@ object GraftFunctions {
     // live-session twin of injectPlannerStrategy: the execution-time
     // procedure plans must be plannable on sessions that never saw the
     // extensions hook (Verify, notebooks)
-    if (!spark.experimental.extraStrategies
-        .contains(org.apache.spark.sql.graftshim.GraftProcedureStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+
-          org.apache.spark.sql.graftshim.GraftProcedureStrategy
+    val procs = org.apache.spark.sql.graftshim.GraftProcedureStrategy
+    GraftShims.registerOnce(spark)(_.extraStrategies.contains(procs))(
+      e => e.extraStrategies = e.extraStrategies :+ procs)
   }
 }

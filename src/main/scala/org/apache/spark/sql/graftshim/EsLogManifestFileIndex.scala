@@ -157,13 +157,16 @@ object EsLogManifestFileIndex {
     * snapshot: vectorized scan + codegen, no Row conversion. `sizeInBytes`
     * comes from the manifest, so broadcast decisions see real sizes. When
     * `bounds` cut the files, [[EsLogRowBounds]] is registered on `spark`,
-    * whose optimizer then puts the exact residual above the relation. */
+    * whose optimizer then puts the exact residual above the relation;
+    * [[EsLogScanStrategy]] always is, so filters over the relation plan
+    * with parameters for their Long constants. */
   def relation(spark: org.apache.spark.sql.SparkSession, streamDir: String,
                files: Seq[ManifestFile], schema: StructType,
                options: Map[String, String],
                bounds: Option[OffsetBounds] = None): BaseRelation = {
     val index = new EsLogManifestFileIndex(streamDir, files, bounds)
     if (index.bounds.nonEmpty) EsLogRowBounds.register(spark)
+    EsLogScanStrategy.register(spark)
     HadoopFsRelation(
       index,
       partitionSchema = StructType(Nil),
@@ -184,7 +187,12 @@ object EsLogManifestFileIndex {
   * either the exact straddle `base_offset + last_offset_delta > lo` with
   * its Parquet-pushable relaxation `base_offset > lo - maxDelta`, or the
   * strict `base_offset >= lo`. Each bound is added only when some file
-  * reaches past it, so a bound that excludes no row costs no Filter. */
+  * reaches past it, so a bound that excludes no row costs no Filter.
+  *
+  * The bounds are `Literal`s here, so manifest pruning (`listFiles`) and
+  * Parquet pushdown see them; [[EsLogScanStrategy]] turns them into
+  * parameters of the planned row filter, so the residual's generated code
+  * is the same for every range of one shape. */
 object EsLogRowBounds extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan transformUp {
@@ -215,11 +223,7 @@ object EsLogRowBounds extends Rule[LogicalPlan] {
   /** Adds the rule to `spark`'s optimizer once, through the session's own
     * `experimental.extraOptimizations`, so a session built without
     * [[graft.sql.GraftSqlExtensions]] plans bounded relations too. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val exp = spark.experimental
-    exp.synchronized {
-      if (!exp.extraOptimizations.contains(this))
-        exp.extraOptimizations = exp.extraOptimizations :+ this
-    }
-  }
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    GraftShims.registerOnce(spark)(_.extraOptimizations.contains(this))(
+      e => e.extraOptimizations = e.extraOptimizations :+ this)
 }

@@ -70,6 +70,15 @@ object GraftShims {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       EsLogRowBounds(LogicalRelation(rel)))
 
+  /** Runs `add` on `spark`'s experimental methods unless `present` already
+    * holds, under their lock: each planner hook joins a session once, however
+    * many relations and threads ask. */
+  def registerOnce(spark: SparkSession)(present: org.apache.spark.sql.ExperimentalMethods => Boolean)(
+      add: org.apache.spark.sql.ExperimentalMethods => Unit): Unit = {
+    val exp = spark.experimental
+    exp.synchronized { if (!present(exp)) add(exp) }
+  }
+
   /** `df`, a union of scans of `files`, cut to the rows inside `bounds` by
     * the residual [[EsLogRowBounds]] puts over a bounded manifest relation. */
   def withinBounds(df: DataFrame, files: Seq[ManifestFile], bounds: OffsetBounds): DataFrame = {

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.eslog.EsCatalog
 import graft.meta._
 
@@ -39,7 +37,7 @@ class EsCatalogScaleSpec extends SparkTestBase {
     val store = new ObjectLogStore(new LatencyStore(new InMemoryObjectStore, OpNanos))
     // a real (empty) temp dir as the root path; all metadata-log IO under it
     // routes to the latency-injected object store
-    val root = Files.createTempDirectory("cat-scale-").toString + "/cat"
+    val root = tmpDir("cat-scale-") + "/cat"
     MetaLog.route(root, store)
     try {
       val cat = new EsCatalog(root)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.meta._
@@ -12,7 +11,7 @@ import graft.meta._
   * object-store impl; porting the log to a new backend means adding a third
   * subclass, not new tests.
   */
-abstract class LogStoreContractSpec extends AnyFunSuite {
+abstract class LogStoreContractSpec extends AnyFunSuite with TempDirs {
   def storeName: String
   /** A fresh store + a fresh root directory path valid for it. */
   def freshStore(): (LogStore, String)
@@ -117,7 +116,7 @@ abstract class LogStoreContractSpec extends AnyFunSuite {
 class FsLogStoreContractSpec extends LogStoreContractSpec {
   def storeName = "FsLogStore"
   def freshStore(): (LogStore, String) =
-    (FsLogStore, Files.createTempDirectory("lsc-fs-").toString)
+    (FsLogStore, tmpDir("lsc-fs-"))
 }
 
 /** Third contract configuration: [[HadoopLogStore]] with the HADOOP-19256
@@ -174,7 +173,7 @@ class HadoopConditionalLogStoreContractSpec extends LogStoreContractSpec {
     val conf = new org.apache.hadoop.conf.Configuration()
     conf.setBoolean(HadoopLogStore.ConditionalCreateKey, true)
     val store = new HadoopLogStore(conf)
-    val dir = Files.createTempDirectory("lsc-cond-local-").toString
+    val dir = tmpDir("lsc-cond-local-")
     assertThrows[IllegalArgumentException](
       store.putIfAbsent(s"file:$dir/probe", "x".getBytes))
   }

@@ -9,10 +9,26 @@ import graft.meta._
   * window contiguity (window.rs:254-301), range contains (range/mod.rs:203-232),
   * seal idempotence (replication_range.rs:313-316), epoch fencing, trim.
   */
-class MetaLogSpec extends AnyFunSuite {
+class MetaLogSpec extends AnyFunSuite with TempDirs {
 
-  private def tmp(): String =
-    Files.createTempDirectory("eslog-test-").toString
+  private def tmp(): String = tmpDir("eslog-test-")
+
+  /** A store that counts the reads, existence checks and listings made
+    * through it. */
+  private final class CountingLogStore(inner: LogStore) extends LogStore {
+    val reads = new java.util.concurrent.atomic.AtomicLong()
+    val existChecks = new java.util.concurrent.atomic.AtomicLong()
+    val lists = new java.util.concurrent.atomic.AtomicLong()
+    def snapshot(): (Long, Long, Long) = (reads.get, existChecks.get, lists.get)
+    override def read(p: String) = { reads.incrementAndGet(); inner.read(p) }
+    override def exists(p: String) = { existChecks.incrementAndGet(); inner.exists(p) }
+    override def isDir(p: String) = inner.isDir(p)
+    override def list(d: String) = { lists.incrementAndGet(); inner.list(d) }
+    override def putIfAbsent(p: String, b: Array[Byte]) = inner.putIfAbsent(p, b)
+    override def putAtomic(p: String, b: Array[Byte]): Unit = inner.putAtomic(p, b)
+    override def mkdirs(p: String): Unit = inner.mkdirs(p)
+    override def delete(p: String): Unit = inner.delete(p)
+  }
 
   private def fm(start: Long, end: Long, path: String = "f"): FileMeta =
     FileMeta(s"$path-$start", end - start, 100L, start, end, 0L, 0L)
@@ -282,21 +298,7 @@ class MetaLogSpec extends AnyFunSuite {
     // wall time: deterministic on any host). This is what the probe-forward
     // load guarantees; a listing-based load would scale its cost with the
     // directory size and fail the equality.
-    final class CountingLogStore(inner: LogStore) extends LogStore {
-      val reads = new java.util.concurrent.atomic.AtomicLong()
-      val existChecks = new java.util.concurrent.atomic.AtomicLong()
-      val lists = new java.util.concurrent.atomic.AtomicLong()
-      def snapshot(): (Long, Long, Long) = (reads.get, existChecks.get, lists.get)
-      override def read(p: String) = { reads.incrementAndGet(); inner.read(p) }
-      override def exists(p: String) = { existChecks.incrementAndGet(); inner.exists(p) }
-      override def isDir(p: String) = inner.isDir(p)
-      override def list(d: String) = { lists.incrementAndGet(); inner.list(d) }
-      override def putIfAbsent(p: String, b: Array[Byte]) = inner.putIfAbsent(p, b)
-      override def putAtomic(p: String, b: Array[Byte]): Unit = inner.putAtomic(p, b)
-      override def mkdirs(p: String): Unit = inner.mkdirs(p)
-      override def delete(p: String): Unit = inner.delete(p)
-    }
-    val dir = Files.createTempDirectory("metalog-churn-").toString
+    val dir = tmpDir("metalog-churn-")
     val counting = new CountingLogStore(FsLogStore)
     MetaLog.route(dir, counting)
     try {
@@ -331,12 +333,42 @@ class MetaLogSpec extends AnyFunSuite {
     } finally MetaLog.unroute(dir)
   }
 
+  test("latestVersion probes from the checkpoint: no listing, op-counts flat across log growth") {
+    // a watch source asks for the latest version on every trigger, so its
+    // cost must not grow with the log: pointer read + tail probe only
+    val dir = tmpDir("metalog-latest-")
+    assert(MetaLog.latestVersion(dir) == -1L, "no log yet")
+    val counting = new CountingLogStore(FsLogStore)
+    MetaLog.route(dir, counting)
+    try {
+      var st = EsLogTestOps.createAndOpen(dir)
+      def churn(n: Int): Unit = (0 until n).foreach { i =>
+        st = MetaLog.commit(dir, st, Seq(KvPut("cursor", i.toString)))
+      }
+      def opsPerCall(): (Long, Long, Long) = {
+        val before = counting.snapshot()
+        assert(MetaLog.latestVersion(dir) == st.version, "latestVersion must see the head")
+        val after = counting.snapshot()
+        (after._1 - before._1, after._2 - before._2, after._3 - before._3)
+      }
+      assert(opsPerCall()._3 == 0)
+      churn(1007)
+      val small = opsPerCall()
+      churn(3000)
+      val large = opsPerCall()
+      assert(small == large, s"op-counts must be flat across log growth: $small vs $large")
+      assert(large._3 == 0, s"latestVersion must not list the log directory: $large")
+      // the pointer's existence check + read, then one check per tail version
+      assert(large._1 == 1 && large._2 <= 2 + MetaLog.CheckpointInterval, large.toString)
+    } finally MetaLog.unroute(dir)
+  }
+
   test("load refuses a truncated state when a mid-log gap sits below a checkpoint") {
     // The probe-forward load's contiguity contract: "first missing version =
     // log tail". A version file missing MID-LOG (interrupted external copy,
     // manual deletion) with surviving checkpoints above it would otherwise
     // fold to a silently TRUNCATED state; the pointer backstop must refuse.
-    val dir = Files.createTempDirectory("metalog-gap-").toString
+    val dir = tmpDir("metalog-gap-")
     var st = EsLogTestOps.createAndOpen(dir)
     (0 until 25).foreach { i =>
       st = MetaLog.commit(dir, st, Seq(KvPut("cursor", i.toString)))
@@ -357,7 +389,7 @@ class MetaLogSpec extends AnyFunSuite {
     // trigger the same refusal: the pointer read survives the parse failure
     // (nested best-efforts in readLastCheckpointWithPointer), so the
     // backstop still sees the pointer above the truncated fold
-    val dirC = Files.createTempDirectory("metalog-gap-corrupt-").toString
+    val dirC = tmpDir("metalog-gap-corrupt-")
     var stC = EsLogTestOps.createAndOpen(dirC)
     (0 until 25).foreach { i =>
       stC = MetaLog.commit(dirC, stC, Seq(KvPut("cursor", i.toString)))
@@ -374,7 +406,7 @@ class MetaLogSpec extends AnyFunSuite {
     assert(eC.getMessage.contains("metadata log gap"), eC.getMessage)
     // whereas a clean tail (no gap, pointer at or below the fold) loads fine,
     // and a corrupted checkpoint WITHOUT a gap just folds from zero:
-    val dir2 = Files.createTempDirectory("metalog-nogap-").toString
+    val dir2 = tmpDir("metalog-nogap-")
     var st2 = EsLogTestOps.createAndOpen(dir2)
     (0 until 25).foreach { i =>
       st2 = MetaLog.commit(dir2, st2, Seq(KvPut("cursor", i.toString)))

@@ -559,7 +559,7 @@ class PlanAuditSpec extends SparkTestBase {
       (0 until 50).map(i => f"${graft.functions.Portable.md5Long(s"m$seed:$i")}%08x").mkString
     val lib = (0 until 12).map(i => (i.toLong, blob(i))).toDF("media_id", "payload")
       .select(col("media_id"), col("payload").cast("binary").as("payload"))
-    val root = java.nio.file.Files.createTempDirectory("media-idx-").toString
+    val root = tmpDir("media-idx-")
     Multimodal.writeMediaLibraryIndex(lib, "media_id", "payload", root,
       divisor = 16)
     // incoming: ONE exact re-upload of library #3 under a new id — its
@@ -656,7 +656,7 @@ class PlanAuditSpec extends SparkTestBase {
     assert(viaArtifact == viaCorpus,
       s"artifact scoring must equal in-corpus scoring: ${viaArtifact.size} vs ${viaCorpus.size}")
     // persisted-artifact deployment shape: parquet round trip changes nothing
-    val dir = java.nio.file.Files.createTempDirectory("lmstats-").toString
+    val dir = tmpDir("lmstats-")
     stats.write.mode("overwrite").parquet(dir)
     val viaDisk = TextOps.lmScoreWith(docs, "doc_id", "text", spark.read.parquet(dir))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -693,7 +693,7 @@ class PlanAuditSpec extends SparkTestBase {
     import graft.operators.Multimodal
     val lib = Seq((1L, "abcdefghabcdefgh")).toDF("media_id", "payload")
       .select(col("media_id"), col("payload").cast("binary").as("payload"))
-    val root = java.nio.file.Files.createTempDirectory("media-idx-empty-").toString
+    val root = tmpDir("media-idx-empty-")
     Multimodal.writeMediaLibraryIndex(lib, "media_id", "payload", root,
       divisor = 16)
     val empty = Seq.empty[(Long, Array[Byte])].toDF("media_id", "payload")
@@ -710,7 +710,7 @@ class PlanAuditSpec extends SparkTestBase {
     import graft.operators.Multimodal
     val lib = Seq((1L, "abcdefghabcdefghabcdefghabcdefgh")).toDF("media_id", "payload")
       .select(col("media_id"), col("payload").cast("binary").as("payload"))
-    val root = java.nio.file.Files.createTempDirectory("media-idx-big-").toString
+    val root = tmpDir("media-idx-big-")
     Multimodal.writeMediaLibraryIndex(lib, "media_id", "payload", root,
       divisor = 16)
     val incoming = Seq((100L, "abcdefghabcdefghabcdefghabcdefgh"),
@@ -1639,5 +1639,147 @@ class PlanAuditSpec extends SparkTestBase {
       assert(back.count() == 1000L)
       assert(back.where(col("base_offset") =!= col("k")).count() == 0)
     }
+  }
+
+  /** Janino compiles, planning side and executors, while `body` runs. */
+  private def compiles[T](body: => T): (T, Long) = {
+    val h = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = h.getCount
+    val out = body
+    (out, h.getCount - before)
+  }
+
+  private type Batch = (Long, Int, Long, String)
+
+  private def batchRows(df: DataFrame): Seq[Batch] =
+    df.select(col("base_offset"), col("last_offset_delta"), col("base_timestamp"),
+      col("payload").cast("string")).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getString(3))).toSeq.sorted
+
+  /** 400 batches in 4 files, batch `i` spanning `i % 3 + 1` offsets at
+    * `ts = 1000 + 10 i`; returns the dir, the model of every batch and the
+    * files' offset ranges in offset order. */
+  private def paramStream(): (String, Seq[Batch], Seq[(Long, Long)]) = {
+    import graft.eslog.EsLog
+    val dir = tmpDir("param-")
+    EsLog.create(dir)
+    EsLog.open(dir, 1L)
+    EsLog.append(spark, dir, spark.range(400).select(col("id"),
+      col("id").cast("string").cast("binary").as("payload"),
+      (col("id") % 3 + 1).cast("int").as("last_offset_delta"),
+      (col("id") * 10 + 1000).as("base_timestamp")), 1L, sortKey = Some("id"), numPartitions = 4)
+    val deltas = (0 until 400).map(_ % 3 + 1)
+    val starts = deltas.scanLeft(0L)(_ + _)
+    val model = (0 until 400).map(i => (starts(i), deltas(i), 1000L + 10 * i, i.toString))
+    val files = graft.meta.MetaLog.load(dir).allFiles.map(f => (f.startOffset, f.endOffset)).sorted
+    assert(files.size == 4 && files.forall { case (s, e) => e - s > 100 }, files)
+    (dir, model, files)
+  }
+
+  private def straddle(model: Seq[Batch], lo: Long, hi: Long): Seq[Batch] =
+    model.filter { case (o, d, _, _) => o < hi && o + d > lo }
+
+  /** Ranges cutting into files at both ends: the one plan shape of a
+    * bounded read, a lower and an upper bound in its residual. */
+  private def interior(files: Seq[(Long, Long)]): Seq[(Long, Long)] =
+    files.flatMap { case (s, e) => Seq((s + 5, s + 40), (s + 11, e - 7)) } ++
+      files.sliding(2).map { case Seq((s, _), (s2, _)) => (s + 9, s2 + 13) }
+
+  test("bounded eslog reads compile once per plan shape, not once per range") {
+    import graft.eslog.EsLog
+    val (dir, model, files) = paramStream()
+    val ranges = interior(files)
+    val fetchForm = (lo: Long, hi: Long) => EsLog.fetch(spark, dir, lo, hi)
+    val formatForm = (lo: Long, hi: Long) => spark.read.format("eslog")
+      .option("startOffset", lo.toString).option("endOffset", hi.toString).load(dir)
+    for ((name, read) <- Seq("fetch" -> fetchForm, "format(eslog)" -> formatForm)) {
+      val (wLo, wHi) = ranges.head
+      assert(batchRows(read(wLo, wHi)) == straddle(model, wLo, wHi), s"$name warm-up")
+      ranges.tail.foreach { case (lo, hi) =>
+        val (rows, n) = compiles(batchRows(read(lo, hi)))
+        assert(rows == straddle(model, lo, hi), s"$name [$lo, $hi)")
+        assert(n == 0, s"$name [$lo, $hi) compiled $n classes")
+      }
+    }
+    // time windows: only the window's own filter, over files pruned by time
+    def byTime(from: Long, until: Long) = EsLog.fetchByTime(spark, dir, from, until)
+    def inTime(from: Long, until: Long) = model.filter(b => b._3 >= from && b._3 < until)
+    assert(batchRows(byTime(1005, 1500)) == inTime(1005, 1500))
+    Seq((1995L, 2333L), (3001L, 4999L), (1010L, 4100L)).foreach { case (from, until) =>
+      val (rows, n) = compiles(batchRows(byTime(from, until)))
+      assert(rows == inTime(from, until), s"fetchByTime [$from, $until)")
+      assert(n == 0, s"fetchByTime [$from, $until) compiled $n classes")
+    }
+    // micro-batches of 37 offsets; a batch whose residual has the shape of
+    // an earlier one's (which bounds cut a file; the first batch's lower
+    // bound straddles) must compile nothing
+    // read from a session that has planned no eslog read yet
+    val fresh = spark.newSession()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[Batch], Long)]()
+    val q = fresh.readStream.format("eslog").option("maxOffsetsPerTrigger", "37").load(dir)
+      .writeStream.option("checkpointLocation", tmpDir("param-ckpt-"))
+      .foreachBatch { (df: DataFrame, id: Long) =>
+        val (rows, n) = compiles(batchRows(df))
+        seen.add((id, rows, n)); ()
+      }
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination(120000)
+    import scala.jdk.CollectionConverters._
+    val perBatch = seen.asScala.toSeq.sortBy(_._1)
+    assert(perBatch.flatMap(_._2).sorted == model, "every batch once")
+    val next = model.last._1 + model.last._2
+    assert(perBatch.map(_._1) == (0L until (next + 36) / 37), perBatch.map(_._1))
+    def shape(id: Long) = {
+      val (lo, hi) = (37 * id, math.min(37 * id + 37, next))
+      val read = files.filter { case (s, e) => s < hi && e > lo }
+      (id == 0, read.exists(_._1 < lo), read.exists(_._2 > hi))
+    }
+    val repeats = perBatch.filter(b => (0L until b._1).exists(shape(_) == shape(b._1)))
+    assert(repeats.size >= perBatch.size - 4, perBatch.map(b => shape(b._1)))
+    assert(repeats.forall(_._3 == 0), s"compiles per micro-batch: ${perBatch.map(b => b._1 -> b._3)}")
+  }
+
+  test("HotCache-split fetches reuse their generated code across ranges") {
+    import graft.eslog.{EsLog, HotCache}
+    val (dir, model, files) = paramStream()
+    try {
+      HotCache.clear()
+      spark.conf.set(HotCache.GLOBAL_BYTES, (64L * 1024 * 1024).toString)
+      // the newest two files are hot, the older two read cold
+      val tail = graft.meta.MetaLog.load(dir).allFiles.sortBy(_.startOffset).takeRight(2)
+      spark.conf.set(HotCache.STREAM_BYTES, tail.map(_.bytes).sum.toString)
+      val Seq(_, (s1, e1), (s2, e2), (s3, e3)) = files
+      // one shape per pair: one hot file; two hot files; a cold and a hot one
+      val shapes = Seq(
+        Seq((s2 + 5, s2 + 40), (s3 + 11, e3 - 7)),
+        Seq((s2 + 9, s3 + 13), (s2 + 30, e3 - 3)),
+        Seq((s1 + 7, s2 + 21), (e1 - 40, e2 - 60)))
+      shapes.foreach { case Seq((wLo, wHi), (lo, hi)) =>
+        assert(batchRows(EsLog.fetch(spark, dir, wLo, wHi)) == straddle(model, wLo, wHi))
+        val (rows, n) = compiles(batchRows(EsLog.fetch(spark, dir, lo, hi)))
+        assert(rows == straddle(model, lo, hi), s"hot fetch [$lo, $hi)")
+        assert(n == 0, s"hot fetch [$lo, $hi) compiled $n classes")
+      }
+      assert(HotCache.resident.keySet == tail.map(f => graft.meta.MetaLog.join(dir, f.path)).toSet)
+    } finally {
+      spark.conf.unset(HotCache.GLOBAL_BYTES)
+      spark.conf.unset(HotCache.STREAM_BYTES)
+      HotCache.clear()
+    }
+  }
+
+  test("two differently-bounded fetches in one query each return their own range") {
+    import graft.eslog.EsLog
+    val (dir, model, files) = paramStream()
+    val Seq((a, b), (c, d)) = interior(files).take(2)
+    val both = EsLog.fetch(spark, dir, a, b).union(EsLog.fetch(spark, dir, c, d))
+    assert(batchRows(both) == (straddle(model, a, b) ++ straddle(model, c, d)).sorted)
+    // an exchange over each side: equal canonical plans would share one
+    def perOffset(lo: Long, hi: Long) =
+      EsLog.fetch(spark, dir, lo, hi).groupBy("base_offset").agg(count(lit(1)).as("n"))
+    val grouped = perOffset(a, b).union(perOffset(c, d)).collect()
+      .map(r => r.getLong(0)).toSeq.sorted
+    assert(grouped == (straddle(model, a, b) ++ straddle(model, c, d)).map(_._1).sorted)
   }
 }
