@@ -2,11 +2,10 @@ package org.apache.spark.sql.graftshim
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, LeafExpression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{AttributeSet, Expression, LeafExpression, Literal, NamedExpression, PredicateHelper}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, JavaCode}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
-import org.apache.spark.sql.classic
-import org.apache.spark.sql.execution.{FilterExec, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.execution.datasources.{FileSourceStrategy, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -43,30 +42,34 @@ case class LongParam(value: Long) extends LeafExpression {
   * `format("eslog")` bounds, the streaming source's micro-batches, export's
   * range reads and user filters over an eslog frame.
   *
-  * It matches a Filter, under at most one Project, directly over a manifest
-  * relation ([[EsLogManifestFileIndex]]) or over a cached single-relation
-  * eslog frame (a [[graft.eslog.HotCache]] entry), and delegates the
-  * planning to Spark's own strategy for that leaf. So manifest pruning in
-  * `listFiles` and Parquet's `PushedFilters` still see the literal
-  * predicates; only the exact row filter evaluated per row — the
-  * `FilterExec` condition — is parameterized.
+  * It matches a deterministic Filter, under at most one Project, directly
+  * over a manifest relation ([[EsLogManifestFileIndex]]) or over a cached
+  * single-relation eslog frame (a [[graft.eslog.HotCache]] entry). Only the
+  * exact row filter evaluated per row, the `FilterExec` condition, is
+  * parameterized:
+  *  - over a manifest relation it delegates to Spark's `FileSourceStrategy`,
+  *    so manifest pruning in `listFiles` and Parquet's `PushedFilters` still
+  *    see the literal predicates;
+  *  - over a cached frame it builds the plan Spark's `InMemoryScans` builds,
+  *    and the in-memory scan keeps the literal predicates, so it still skips
+  *    cached batches by their offset stats. Spark compiles those predicates
+  *    into a stats filter per scan, so a hot read still compiles that one
+  *    class for each new range.
   *
-  * Over a cached frame the in-memory scan's batch predicates are
-  * parameterized too: Spark compiles them into a per-task stats filter,
-  * which would otherwise be one compile per range and task. The cost is
-  * that the scan no longer skips cached batches by their offset stats; a
-  * HotCache entry is one file the fetch already chose by its offsets, and
-  * a file's rows fill one batch up to `inMemoryColumnarStorage.batchSize`
-  * rows, so only a file above that size loses any skipping.
-  *
-  * Any other shape gets nothing from here and plans as before. */
-object EsLogScanStrategy extends SparkStrategy {
+  * It reads no session: the planner that calls it plans the rest. Any other
+  * shape gets nothing from here and plans as before. */
+object EsLogScanStrategy extends SparkStrategy with PredicateHelper {
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case Filtered(EsLogFiles()) => FileSourceStrategy(plan).map(parameterize)
-    case Filtered(m: InMemoryRelation) if EsLogFiles.unapply(m.cacheBuilder.logicalPlan) =>
-      SparkSession.active.asInstanceOf[classic.SparkSession]
-        .sessionState.planner.InMemoryScans(plan).map(parameterize)
+    case Filtered(_, _, EsLogFiles()) => FileSourceStrategy(plan).map(parameterize)
+    case Filtered(projects, cond, m: InMemoryRelation)
+        if cond.deterministic && EsLogFiles.unapply(m.cacheBuilder.logicalPlan) =>
+      val needed = AttributeSet(projects.flatMap(_.references)) ++ cond.references
+      val scan = InMemoryTableScanExec(m.output.filter(needed.contains),
+        splitConjunctivePredicates(cond), m)
+      val filter = FilterExec(params(cond), scan)
+      (if (projects.map(_.toAttribute) == filter.output) filter
+       else ProjectExec(projects, filter)) :: Nil
     case _ => Nil
   }
 
@@ -77,20 +80,21 @@ object EsLogScanStrategy extends SparkStrategy {
 
   private def parameterize(plan: SparkPlan): SparkPlan = plan.transform {
     case f: FilterExec => f.copy(condition = params(f.condition))
-    case s: InMemoryTableScanExec => s.copy(predicates = s.predicates.map(params))
   }
 
   private def params(e: Expression): Expression = e.transform {
     case Literal(v: Long, LongType) => LongParam(v)
   }
 
-  /** The leaf of a Filter, or of a Project directly over a Filter. */
+  /** The output, condition and leaf of a Filter, or of a Project directly
+    * over a Filter. */
   private object Filtered {
-    def unapply(plan: LogicalPlan): Option[LogicalPlan] = plan match {
-      case Project(_, Filter(_, leaf)) => Some(leaf)
-      case Filter(_, leaf) => Some(leaf)
-      case _ => None
-    }
+    def unapply(plan: LogicalPlan): Option[(Seq[NamedExpression], Expression, LogicalPlan)] =
+      plan match {
+        case Project(projects, Filter(cond, leaf)) => Some((projects, cond, leaf))
+        case Filter(cond, leaf) => Some((leaf.output, cond, leaf))
+        case _ => None
+      }
   }
 
   /** A relation over a stream manifest. */

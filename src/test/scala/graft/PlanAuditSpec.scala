@@ -1724,7 +1724,8 @@ class PlanAuditSpec extends SparkTestBase {
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    q.awaitTermination(120000)
+    try assert(q.awaitTermination(120000), "stream did not finish in 120 s")
+    finally q.stop()
     import scala.jdk.CollectionConverters._
     val perBatch = seen.asScala.toSeq.sortBy(_._1)
     assert(perBatch.flatMap(_._2).sorted == model, "every batch once")
@@ -1740,9 +1741,12 @@ class PlanAuditSpec extends SparkTestBase {
     assert(repeats.forall(_._3 == 0), s"compiles per micro-batch: ${perBatch.map(b => b._1 -> b._3)}")
   }
 
-  test("HotCache-split fetches reuse their generated code across ranges") {
+  test("HotCache-split fetches reuse their row filter's code; only the batch stats filter compiles per range") {
     import graft.eslog.{EsLog, HotCache}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.graftshim.LongParam
     val (dir, model, files) = paramStream()
+    val pruning = "spark.sql.inMemoryColumnarStorage.partitionPruning"
     try {
       HotCache.clear()
       spark.conf.set(HotCache.GLOBAL_BYTES, (64L * 1024 * 1024).toString)
@@ -1750,16 +1754,30 @@ class PlanAuditSpec extends SparkTestBase {
       val tail = graft.meta.MetaLog.load(dir).allFiles.sortBy(_.startOffset).takeRight(2)
       spark.conf.set(HotCache.STREAM_BYTES, tail.map(_.bytes).sum.toString)
       val Seq(_, (s1, e1), (s2, e2), (s3, e3)) = files
-      // one shape per pair: one hot file; two hot files; a cold and a hot one
+      // one shape per triple: one hot file; two hot files; a cold and a hot one
       val shapes = Seq(
-        Seq((s2 + 5, s2 + 40), (s3 + 11, e3 - 7)),
-        Seq((s2 + 9, s3 + 13), (s2 + 30, e3 - 3)),
-        Seq((s1 + 7, s2 + 21), (e1 - 40, e2 - 60)))
-      shapes.foreach { case Seq((wLo, wHi), (lo, hi)) =>
+        Seq((s2 + 5, s2 + 40), (s3 + 11, e3 - 7), (s2 + 17, e2 - 9)),
+        Seq((s2 + 9, s3 + 13), (s2 + 30, e3 - 3), (s2 + 21, s3 + 50)),
+        Seq((s1 + 7, s2 + 21), (e1 - 40, e2 - 60), (s1 + 25, s2 + 44)))
+      shapes.foreach { case Seq((wLo, wHi), (lo, hi), (lo2, hi2)) =>
         assert(batchRows(EsLog.fetch(spark, dir, wLo, wHi)) == straddle(model, wLo, wHi))
-        val (rows, n) = compiles(batchRows(EsLog.fetch(spark, dir, lo, hi)))
+        // the cached scans keep literal predicates, so they still skip
+        // batches by offset stats; Spark compiles those predicates into one
+        // stats filter per new range
+        val df = EsLog.fetch(spark, dir, lo, hi)
+        val (rows, n) = compiles(batchRows(df))
         assert(rows == straddle(model, lo, hi), s"hot fetch [$lo, $hi)")
-        assert(n == 0, s"hot fetch [$lo, $hi) compiled $n classes")
+        assert(n == 1, s"hot fetch [$lo, $hi) compiled $n classes")
+        val scans = df.queryExecution.executedPlan.collect { case s: InMemoryTableScanExec => s }
+        assert(scans.nonEmpty && scans.forall(s => s.predicates.nonEmpty &&
+          s.predicates.forall(_.find(_.isInstanceOf[LongParam]).isEmpty)), scans.map(_.predicates))
+        // with batch skipping off, nothing is left to compile
+        spark.conf.set(pruning, "false")
+        try {
+          val (rows2, n2) = compiles(batchRows(EsLog.fetch(spark, dir, lo2, hi2)))
+          assert(rows2 == straddle(model, lo2, hi2), s"hot fetch [$lo2, $hi2)")
+          assert(n2 == 0, s"hot fetch [$lo2, $hi2) without stats skipping compiled $n2 classes")
+        } finally spark.conf.unset(pruning)
       }
       assert(HotCache.resident.keySet == tail.map(f => graft.meta.MetaLog.join(dir, f.path)).toSet)
     } finally {
